@@ -43,10 +43,6 @@ def token_count(c: Column) -> Column:
     return F.size(tokens(c))
 
 
-def char_count(c: Column) -> Column:
-    return F.length(c)
-
-
 def punct_ratio(c: Column) -> Column:
     """Fraction of characters that are not word chars or whitespace."""
     stripped = F.regexp_replace(c, r"[\w\s]", "")
@@ -55,32 +51,9 @@ def punct_ratio(c: Column) -> Column:
     ).otherwise(F.lit(0.0))
 
 
-def avg_token_len(c: Column) -> Column:
-    toks = tokens(c)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def stopword_ratio(c: Column, lang: str = "en") -> Column:
-    """Fraction of (lowercased, punctuation-split) tokens that are
-    stopwords of ``lang``."""
-    toks = bpe_ish_tokens(c)
-    hits = F.size(
-        F.filter(toks, lambda x: x.isin(*STOPWORDS[lang]))
-    )
-    return F.when(F.size(toks) > 0, hits / F.size(toks)).otherwise(F.lit(0.0))
-
-
 def stopword_hits_from(toks: Column, lang: str) -> Column:
     """Stopword-hit count of ``lang`` over a pre-tokenized column."""
     return F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS[lang])))
-
-
-def stopword_hits(c: Column, lang: str) -> Column:
-    """Count of tokens that are stopwords of ``lang`` (for language ID)."""
-    return stopword_hits_from(bpe_ish_tokens(c), lang)
 
 
 def detected_lang_from(toks: Column) -> Column:
@@ -124,13 +97,6 @@ def quality_score_from(ws_toks: Column, bpe_toks: Column, c: Column) -> Column:
     )
     stop_term = F.lit(1.0) - F.least(F.abs(stop - F.lit(0.4)) * 2.0, F.lit(1.0))
     return F.round((length_term + punct_term + stop_term) / 3.0, 6)
-
-
-def quality_score(c: Column) -> Column:
-    """Composite [0,1] quality score: rewards mid-length docs with low
-    punctuation density and a natural stopword ratio. Deterministic and
-    SQL-replicable (all built-ins)."""
-    return quality_score_from(tokens(c), bpe_ish_tokens(c), c)
 
 
 def fingerprint(c: Column) -> Column:

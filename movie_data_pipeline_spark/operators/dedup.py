@@ -325,24 +325,6 @@ def minhash_lsh_duplicates(
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.5,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dups, LSH-accelerated (candidates from
-    minhash banding, verify exact). Same plan as minhash_lsh_duplicates
-    with a lower band precision — exposed separately for parity with
-    the 'n-gram Jaccard' dedup family."""
-    return minhash_lsh_duplicates(
-        docs, text_col, id_col, n=n, num_perm=16, bands=8,
-        threshold=threshold, max_bucket=max_bucket,
-    )
-
-
 # ---------------- simhash ----------------
 
 

@@ -612,6 +612,11 @@ def parallel_multi_row_number(
         (value_col, list(tiebreaks), out_col)
         for value_col, tiebreaks, out_col in specs
     ]
+    if not specs:
+        raise ValueError(
+            "parallel_multi_row_number: specs is empty; pass at least one "
+            "(value_col, tiebreaks, out_col)"
+        )
     helper = [f"_mrb{i}" for i in range(len(specs))]
     clash = sorted(set(df.columns) & set(helper))
     if clash:

@@ -14,11 +14,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def top_k(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
-    """Global top-k under a caller-supplied TOTAL order."""
-    return df.orderBy(*order).limit(k)
-
-
 def top_k_per_group(
     df: DataFrame,
     partition_cols: Sequence[str],

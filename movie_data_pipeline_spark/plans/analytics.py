@@ -42,11 +42,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from ..operators.similarity import brute_force_knn
 from ..sources.catalog import load_table
-
-
-def _dec_sum(col: F.Column, scale: int = 4) -> F.Column:
-    """Partition-order-independent sum of a double column."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
+from .columns import dec_sum
 
 
 def load_events(spark: SparkSession, sf: str) -> DataFrame:
@@ -82,7 +78,7 @@ def load_events(spark: SparkSession, sf: str) -> DataFrame:
 
 def _avg2(col: F.Column) -> F.Column:
     """ROUND(exact-sum / count, 2) — deterministic avg."""
-    return F.round(_dec_sum(col).cast("double") / F.count(col), 2)
+    return F.round(dec_sum(col, 4).cast("double") / F.count(col), 2)
 
 
 # ---------------------------------------------------------------------------
@@ -239,8 +235,8 @@ def pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
     return (
         li.groupBy("l_returnflag", "l_linestatus")
         .agg(
-            _dec_sum(F.col("l_quantity")).cast("double").alias("sum_qty"),
-            _dec_sum(F.col("l_extendedprice")).cast("double").alias("sum_base_price"),
+            dec_sum(F.col("l_quantity"), 4).cast("double").alias("sum_qty"),
+            dec_sum(F.col("l_extendedprice"), 4).cast("double").alias("sum_base_price"),
             F.round(F.sum(disc_price).cast("double"), 2).alias("sum_disc_price"),
             F.count(F.lit(1)).alias("count_order"),
         )
@@ -434,7 +430,7 @@ def rollup_orders(spark: SparkSession, sf: str) -> DataFrame:
     )
     return joined.rollup("r_name", "n_name").agg(
         F.count(F.lit(1)).alias("order_count"),
-        F.round(_dec_sum(F.col("o_totalprice")).cast("double"), 2).alias("total_price"),
+        F.round(dec_sum(F.col("o_totalprice"), 4).cast("double"), 2).alias("total_price"),
     )
 
 
@@ -465,12 +461,12 @@ def doc_token_stats(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("doc_count"),
             F.round(
-                _dec_sum(F.col("n_tokens").cast("double")).cast("double")
+                dec_sum(F.col("n_tokens").cast("double"), 4).cast("double")
                 / F.count(F.lit(1)),
                 4,
             ).alias("avg_tokens"),
             F.round(
-                _dec_sum(F.col("n_text_chars").cast("double")).cast("double")
+                dec_sum(F.col("n_text_chars").cast("double"), 4).cast("double")
                 / F.count(F.lit(1)),
                 4,
             ).alias("avg_chars"),
@@ -781,7 +777,7 @@ def events_hourly(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("event_count"),
-            F.round(_dec_sum(F.col("value"), 6).cast("double"), 2).alias("value_sum"),
+            F.round(dec_sum(F.col("value"), 6).cast("double"), 2).alias("value_sum"),
         )
     )
 

@@ -17,7 +17,8 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
 from ..sources.catalog import load_table
-from .analytics import _dec_sum, load_events
+from .analytics import load_events
+from .columns import dec_sum
 
 
 # ---------------------------------------------------------------------------
@@ -61,7 +62,7 @@ def cube_lineitem(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem")
     return li.cube("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("line_count"),
-        _dec_sum(F.col("l_quantity")).cast("double").alias("sum_qty"),
+        dec_sum(F.col("l_quantity"), 4).cast("double").alias("sum_qty"),
     )
 
 
@@ -268,10 +269,10 @@ def orders_above_customer_avg(spark: SparkSession, sf: str) -> DataFrame:
     # disagrees exactly there. The oracle mirrors this with integer
     # cent arithmetic.
     cavg_exact = F.round(
-        _dec_sum(F.col("o_totalprice")).over(w) / F.count(F.lit(1)).over(w), 2
+        dec_sum(F.col("o_totalprice"), 4).over(w) / F.count(F.lit(1)).over(w), 2
     ).cast("double")
     cavg_raw = (
-        _dec_sum(F.col("o_totalprice")).over(w).cast("double")
+        dec_sum(F.col("o_totalprice"), 4).over(w).cast("double")
         / F.count(F.lit(1)).over(w)
     )
     # materialize window values first — Spark (correctly) rejects
@@ -345,7 +346,7 @@ def events_sliding_windows(spark: SparkSession, sf: str) -> DataFrame:
         ev.groupBy(F.window("tsm", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("event_count"),
-            F.round(_dec_sum(F.col("value"), 6).cast("double"), 2).alias("value_sum"),
+            F.round(dec_sum(F.col("value"), 6).cast("double"), 2).alias("value_sum"),
         )
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),

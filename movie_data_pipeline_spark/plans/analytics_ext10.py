@@ -34,12 +34,6 @@ from ..sources.catalog import load_table
 from .analytics import load_events
 
 
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
-
-
 # ---------------------------------------------------------------------------
 # RFM quartile segmentation. Per customer: R = epoch-day of the last
 # order, F = order count, M = exact decimal spend. Each metric gets a

@@ -32,12 +32,6 @@ from ..sources.catalog import load_table
 from .analytics import load_events
 
 
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
-
-
 # ---------------------------------------------------------------------------
 # Blocklist term audit: per blocklist word — how many documents
 # contain it and how many total occurrences; plus the flagged-corpus

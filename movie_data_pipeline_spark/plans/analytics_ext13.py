@@ -35,10 +35,7 @@ from pyspark.sql import functions as F
 from ..functions import text as TX
 from ..sources.catalog import load_table
 from .analytics import load_events
-
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    return F.sum(col.cast(f"decimal(30,{scale})"))
+from .columns import dec_sum
 
 
 # ---------------------------------------------------------------------------
@@ -514,7 +511,7 @@ def user_rolling_7d_value(spark: SparkSession, sf: str) -> DataFrame:
         "user_id", F.expr("ts_sec DIV 86400").alias("day"), "value"
     )
     daily = ev.groupBy("user_id", "day").agg(
-        _dec_sum(F.col("value")).alias("v")
+        dec_sum(F.col("value"), 6).alias("v")
     )
     w = (
         Window.partitionBy("user_id")

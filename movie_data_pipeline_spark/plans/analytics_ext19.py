@@ -64,9 +64,7 @@ def lcp_expr(lo, hi):
     invariant ok <= LCP < bad, with bad starting at n+1 (the virtual
     always-mismatching prefix). Each of the _LCP_STEPS probes halves
     the bracket with ONE substr-equality, and once bad - ok == 1 the
-    fold passes the state through unchanged, so the result is exact.
-    Shared by the registry entry below and tools/stress_r14.py, so
-    the stress tool always measures the SHIPPED formulation."""
+    fold passes the state through unchanged, so the result is exact."""
     n = F.least(F.length(lo), F.length(hi))
 
     def _probe(acc, _):

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .columns import dec_sum
 
 # ---------------------------------------------------------------------------
 # Pivot: long → wide (order counts per priority, by order year).
@@ -977,11 +978,9 @@ def q22_waiting_wealth(spark: SparkSession, sf: str) -> DataFrame:
     customer = load_table(spark, sf, "customer")
     orders = load_table(spark, sf, "orders")
 
-    from .analytics import _dec_sum
-
     pos = customer.filter(F.col("c_acctbal") > 0)
     avg_bal = pos.agg(
-        (_dec_sum(F.col("c_acctbal"), 6).cast("double") / F.count(F.lit(1)))
+        (dec_sum(F.col("c_acctbal"), 6).cast("double") / F.count(F.lit(1)))
         .alias("threshold")
     )
     # "lapsed": no order inside the trailing 90 days of the order
@@ -1006,7 +1005,7 @@ def q22_waiting_wealth(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_cust"),
             (
-                F.round(_dec_sum(F.col("c_acctbal"), 6).cast("double"), 2)
+                F.round(dec_sum(F.col("c_acctbal"), 6).cast("double"), 2)
                 + 0.0
             ).alias("total_bal"),
         )

@@ -18,13 +18,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .columns import dec_sum
 
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum of a double column (same
-    discipline as plans/analytics.py::_dec_sum; redefined here to keep
-    this module import-order-independent of the registry root)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
 
 # ---------------------------------------------------------------------------
 # TPC-H Q2 shape: minimum-cost supplier per part. With no partsupp
@@ -126,7 +121,7 @@ def q11_important_parts(spark: SparkSession, sf: str) -> DataFrame:
         li.l_suppkey == F.col("s_suppkey"),
     )
     per_part = sliced.groupBy("l_partkey").agg(
-        _dec_sum(F.col("l_extendedprice"), 6).alias("part_value")
+        dec_sum(F.col("l_extendedprice"), 6).alias("part_value")
     )
     thr = per_part.agg(
         (
@@ -179,7 +174,7 @@ def q15_top_supplier(spark: SparkSession, sf: str) -> DataFrame:
     )
     sup = load_table(spark, sf, "supplier")
     rev = li.groupBy("l_suppkey").agg(
-        _dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias(
+        dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias(
             "revenue"
         )
     )
@@ -234,7 +229,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf: str) -> DataFrame:
     )
     per_part_avg = brand_li.groupBy("l_partkey").agg(
         (
-            _dec_sum(F.col("l_quantity"), 6).cast("double")
+            dec_sum(F.col("l_quantity"), 6).cast("double")
             / F.count(F.lit(1))
             * F.lit(0.2)
         ).alias("qty_cut")
@@ -246,7 +241,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf: str) -> DataFrame:
     )
     return small.agg(
         F.round(
-            _dec_sum(F.col("l_extendedprice"), 6).cast("double") / F.lit(7.0), 2
+            dec_sum(F.col("l_extendedprice"), 6).cast("double") / F.lit(7.0), 2
         ).alias("avg_yearly"),
         F.count(F.lit(1)).alias("n_small_lines"),
     )
@@ -285,7 +280,7 @@ def q18_large_volume_customers(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer")
     big = (
         li.groupBy("l_orderkey")
-        .agg(_dec_sum(F.col("l_quantity"), 6).alias("sum_qty_dec"))
+        .agg(dec_sum(F.col("l_quantity"), 6).alias("sum_qty_dec"))
         .filter(F.col("sum_qty_dec").cast("double") > 200.0)
     )
     return (
@@ -338,7 +333,7 @@ def q20_excess_shippers(spark: SparkSession, sf: str) -> DataFrame:
         # name-sliced part is linear in SF: AQE picks the build side.
         li.join(part.select("p_partkey"), li.l_partkey == F.col("p_partkey"))
         .groupBy("l_suppkey")
-        .agg(_dec_sum(F.col("l_quantity"), 6).alias("red_qty_dec"))
+        .agg(dec_sum(F.col("l_quantity"), 6).alias("red_qty_dec"))
     )
     avg_qty = shipped.agg(
         (F.sum("red_qty_dec").cast("double") / F.count(F.lit(1))).alias("avg_qty")
@@ -583,7 +578,7 @@ def urgent_revenue_pruned(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
             F.round(
-                _dec_sum(
+                dec_sum(
                     F.col("l_extendedprice") * (1 - F.col("l_discount")), 6
                 ).cast("double"),
                 2,
@@ -708,7 +703,7 @@ def nation_revenue_share_shift(spark: SparkSession, sf: str) -> DataFrame:
             F.year("o_orderdate").cast("int").alias("yr"),
             F.col("c_nationkey").alias("nation"),
         )
-        .agg(_dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias("r"))
+        .agg(dec_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), 6).alias("r"))
     )
     per_year = Window.partitionBy("yr")
     order_n = Window.partitionBy("nation").orderBy("yr")
@@ -826,7 +821,7 @@ def null_semantics_probe(spark: SparkSession, sf: str) -> DataFrame:
     stats = sup.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count("bal").alias("n_nonnull"),
-        F.round(_dec_sum(F.coalesce(F.col("bal"), F.lit(0.0)), 6).cast("double"), 2)
+        F.round(dec_sum(F.coalesce(F.col("bal"), F.lit(0.0)), 6).cast("double"), 2)
         .alias("coalesced_sum"),
         F.min(F.struct(F.col("bal").isNull().cast("int"), "s_suppkey"))["s_suppkey"]
         .alias("first_nonnull_ordered"),

@@ -24,12 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
-
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
+from .columns import dec_sum
 
 
 _REV = lambda: F.col("l_extendedprice") * (1 - F.col("l_discount"))  # noqa: E731
@@ -79,7 +74,7 @@ def q7_nation_trade_volume(spark: SparkSession, sf: str) -> DataFrame:
             F.year("l_shipdate").cast("int").alias("ship_year"),
         )
         .agg(
-            F.round(_dec_sum(_REV(), 6).cast("double"), 2).alias("revenue"),
+            F.round(dec_sum(_REV(), 6).cast("double"), 2).alias("revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
         .orderBy("supp_nation", "cust_nation", "ship_year")
@@ -135,13 +130,13 @@ def q8_market_share(spark: SparkSession, sf: str) -> DataFrame:
     return (
         joined.groupBy(F.year("o_orderdate").cast("int").alias("order_year"))
         .agg(
-            _dec_sum(
+            dec_sum(
                 F.when(F.col("supp_nation") == "NATION_3", _REV()).otherwise(
                     F.lit(0.0)
                 ),
                 6,
             ).alias("_num"),
-            _dec_sum(_REV(), 6).alias("_den"),
+            dec_sum(_REV(), 6).alias("_den"),
         )
         .select(
             "order_year",
@@ -229,10 +224,10 @@ def q14_promo_revenue(spark: SparkSession, sf: str) -> DataFrame:
     return j.agg(
         F.round(
             F.lit(100.0)
-            * _dec_sum(
+            * dec_sum(
                 F.when(F.col("p_type") == "PROMO", _REV()).otherwise(F.lit(0.0)), 6
             ).cast("double")
-            / _dec_sum(_REV(), 6).cast("double"),
+            / dec_sum(_REV(), 6).cast("double"),
             6,
         ).alias("promo_share_pct"),
         F.count(F.lit(1)).alias("n_lines"),
@@ -328,7 +323,7 @@ def q19_disjunctive_revenue(spark: SparkSession, sf: str) -> DataFrame:
         & (F.col("l_quantity").between(20, 30))
     )
     return j.filter(arm1 | arm2 | arm3).agg(
-        F.round(_dec_sum(_REV(), 6).cast("double"), 2).alias("revenue"),
+        F.round(dec_sum(_REV(), 6).cast("double"), 2).alias("revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
 
@@ -457,7 +452,7 @@ def q6_forecast_revenue(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(
             F.round(
-                _dec_sum(F.col("l_extendedprice") * F.col("l_discount"), 6)
+                dec_sum(F.col("l_extendedprice") * F.col("l_discount"), 6)
                 .cast("double"),
                 2,
             ).alias("revenue_delta"),
@@ -513,8 +508,8 @@ def q9_nation_profit(spark: SparkSession, sf: str) -> DataFrame:
             # instead trips the engines' .005-boundary disagreement
             # (hit at sf0.01: 2320476.655 → .66 vs .65)
             F.round(
-                _dec_sum(_REV(), 6)
-                - _dec_sum(F.col("p_retailprice") * F.col("l_quantity"), 6),
+                dec_sum(_REV(), 6)
+                - dec_sum(F.col("p_retailprice") * F.col("l_quantity"), 6),
                 2,
             ).cast("double").alias("profit"),
             F.count(F.lit(1)).alias("n_lines"),
@@ -1031,7 +1026,7 @@ def q10_returned_items(spark: SparkSession, sf: str) -> DataFrame:
     return (
         j.groupBy("c_custkey", "c_name", "n_name")
         .agg(
-            F.round(_dec_sum(_REV(), 6).cast("double"), 2).alias("revenue"),
+            F.round(dec_sum(_REV(), 6).cast("double"), 2).alias("revenue"),
             F.count(F.lit(1)).alias("n_return_lines"),
         )
         .orderBy(F.desc("revenue"), F.asc("c_custkey"))

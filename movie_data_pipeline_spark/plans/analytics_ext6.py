@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from ..operators.ranks import constant_partition_key
+from .columns import SIGMOID_SCORE_SQL, dec_sum, sigmoid_score
 
 # window length (tokens) for exact repeated-span detection; spans are
 # maximal unions of overlapping duplicated windows, so the MINIMUM
@@ -45,12 +46,6 @@ _SPAN_L = 8
 
 # DSIR hashed-feature space size (buckets); two md5 hex chars.
 _DSIR_B = 256
-
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
 
 
 # ---------------------------------------------------------------------------
@@ -348,7 +343,7 @@ def dsir_importance_weights(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.sum("n").alias("n_ngrams"),
             F.round(
-                _dec_sum(
+                dec_sum(
                     F.col("n").cast("decimal(18,0)")
                     * F.col("lr").cast("decimal(18,6)"),
                     6,
@@ -666,7 +661,7 @@ ORDER BY d.doc_id
 # Model-evaluation ops over the scored embeddings — the metrics a
 # training pipeline computes at data scale (score a 100 TB eval set,
 # aggregate; no driver-side sklearn). Both reuse the fixed sigmoid
-# scorer of stats.py::embedding_model_scores (bit-exactness
+# scorer columns.py::sigmoid_score (bit-exactness
 # precedent: fixed-order fold + identical double literals) against
 # the synthetic binary target label >= 5.
 #
@@ -677,27 +672,6 @@ ORDER BY d.doc_id
 # either way, AQE handles it).
 # ---------------------------------------------------------------------------
 
-_SCORE_W = [((-1.0) ** j) / (j + 1.0) for j in range(64)]
-
-
-def _sigmoid_score() -> F.Column:
-    w_col = F.array(*[F.lit(float(x)) for x in _SCORE_W])
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"), w_col, lambda a, b: a * b
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return 1.0 / (1.0 + F.exp(-dot))
-
-
-_SCORE_SQL = (
-    "1.0 / (1.0 + exp(-list_reduce(list_transform(range(0, 64), "
-    "j -> CAST(CAST(embedding AS FLOAT[])[j + 1] AS DOUBLE) * "
-    "CAST((-1.0) ** j / (j + 1.0) AS DOUBLE)), (a, b) -> a + b)))"
-)
-
 
 def score_calibration_bins(spark: SparkSession, sf: str) -> DataFrame:
     """Reliability diagram input: per score decile, the mean
@@ -706,8 +680,8 @@ def score_calibration_bins(spark: SparkSession, sf: str) -> DataFrame:
     aggregate."""
     emb = load_table(spark, sf, "embeddings")
     s = emb.select(
-        F.floor(_sigmoid_score() * 10).cast("int").alias("bin"),
-        F.round(_sigmoid_score(), 6).alias("score"),
+        F.floor(sigmoid_score() * 10).cast("int").alias("bin"),
+        F.round(sigmoid_score(), 6).alias("score"),
         (F.col("label") >= 5).cast("int").alias("pos"),
     )
     return (
@@ -715,7 +689,7 @@ def score_calibration_bins(spark: SparkSession, sf: str) -> DataFrame:
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.round(
-                _dec_sum(F.col("score")).cast("double") / F.count(F.lit(1)), 6
+                dec_sum(F.col("score"), 6).cast("double") / F.count(F.lit(1)), 6
             ).alias("mean_score"),
             F.round(F.sum("pos") / F.count(F.lit(1)), 6).alias("pos_rate"),
         )
@@ -725,8 +699,8 @@ def score_calibration_bins(spark: SparkSession, sf: str) -> DataFrame:
 
 SCORE_CALIBRATION_SQL = f"""
 WITH s AS (
-  SELECT CAST(FLOOR({_SCORE_SQL} * 10) AS INT) AS bin,
-         ROUND({_SCORE_SQL}, 6) AS score,
+  SELECT CAST(FLOOR({SIGMOID_SCORE_SQL} * 10) AS INT) AS bin,
+         ROUND({SIGMOID_SCORE_SQL}, 6) AS score,
          CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
   FROM embeddings
 )
@@ -744,7 +718,7 @@ def score_pr_curve(spark: SparkSession, sf: str) -> DataFrame:
     so the sweep costs one scan regardless of corpus size."""
     emb = load_table(spark, sf, "embeddings")
     s = emb.select(
-        _sigmoid_score().alias("score"),
+        sigmoid_score().alias("score"),
         (F.col("label") >= 5).cast("int").alias("pos"),
     )
     thresholds = spark.createDataFrame(
@@ -787,7 +761,7 @@ def score_pr_curve(spark: SparkSession, sf: str) -> DataFrame:
 
 SCORE_PR_SQL = f"""
 WITH s AS (
-  SELECT {_SCORE_SQL} AS score,
+  SELECT {SIGMOID_SCORE_SQL} AS score,
          CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
   FROM embeddings
 ),
@@ -830,7 +804,7 @@ def score_auc(spark: SparkSession, sf: str) -> DataFrame:
     proves the decomposition."""
     emb = load_table(spark, sf, "embeddings")
     s = emb.select(
-        _sigmoid_score().alias("score"),
+        sigmoid_score().alias("score"),
         (F.col("label") >= 5).cast("int").alias("pos"),
     )
     bounds = s.agg(F.min("score").alias("s0"), F.max("score").alias("s1"))
@@ -882,7 +856,7 @@ def score_auc(spark: SparkSession, sf: str) -> DataFrame:
         F.sum(1 - F.col("pos")).alias("n_neg"),
         F.round(
             (
-                _dec_sum(F.when(F.col("pos") == 1, F.col("midrank"))).cast(
+                dec_sum(F.when(F.col("pos") == 1, F.col("midrank")), 6).cast(
                     "double"
                 )
                 - (F.sum("pos") * (F.sum("pos") + 1)) / 2.0
@@ -895,7 +869,7 @@ def score_auc(spark: SparkSession, sf: str) -> DataFrame:
 
 SCORE_AUC_SQL = f"""
 WITH s AS (
-  SELECT {_SCORE_SQL} AS score,
+  SELECT {SIGMOID_SCORE_SQL} AS score,
          CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
   FROM embeddings
 ),

@@ -37,12 +37,7 @@ from pyspark.sql import functions as F
 
 from ..operators.ranks import constant_partition_key
 from ..sources.catalog import load_table
-
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
+from .columns import SIGMOID_SCORE_SQL, dec_sum, sigmoid_score
 
 
 # ---------------------------------------------------------------------------
@@ -350,29 +345,6 @@ _NDCG_K = 20
 _NDCG_W = [1.0 / math.log2(p + 1) for p in range(1, _NDCG_K + 1)]
 
 
-def _sigmoid_score() -> F.Column:
-    """analytics_ext6._sigmoid_score, redeclared locally to keep the
-    module import-order independent (same weights, same fixed-order
-    fold)."""
-    w = [((-1.0) ** j) / (j + 1.0) for j in range(64)]
-    w_col = F.array(*[F.lit(float(x)) for x in w])
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"), w_col, lambda a, b: a * b
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return 1.0 / (1.0 + F.exp(-dot))
-
-
-_SCORE_SQL = (
-    "1.0 / (1.0 + exp(-list_reduce(list_transform(range(0, 64), "
-    "j -> CAST(CAST(embedding AS FLOAT[])[j + 1] AS DOUBLE) * "
-    "CAST((-1.0) ** j / (j + 1.0) AS DOUBLE)), (a, b) -> a + b)))"
-)
-
-
 def _pos_weight(pos_col: F.Column) -> F.Column:
     expr = F.lit(0.0)
     for p, w in enumerate(_NDCG_W, start=1):
@@ -384,7 +356,7 @@ def score_ndcg(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
     s = emb.select(
         "vec_id",
-        F.round(_sigmoid_score(), 6).alias("score"),
+        F.round(sigmoid_score(), 6).alias("score"),
         (F.pow(F.lit(2.0), F.col("label")) - 1.0).alias("gain"),
         F.col("label"),
     )
@@ -403,7 +375,7 @@ def score_ndcg(spark: SparkSession, sf: str) -> DataFrame:
             F.round(
                 F.col("gain") * _pos_weight(F.row_number().over(w)), 6
             ).alias("term")
-        ).agg(F.round(_dec_sum(F.col("term")).cast("double"), 6).alias("v"))
+        ).agg(F.round(dec_sum(F.col("term"), 6).cast("double"), 6).alias("v"))
 
     model = dcg(s, F.desc("score"), F.asc("vec_id"))
     ideal = dcg(s, F.desc("label"), F.asc("vec_id"))
@@ -427,7 +399,7 @@ def _ndcg_weight_case(pos_expr: str) -> str:
 
 SCORE_NDCG_SQL = f"""
 WITH s AS (
-    SELECT vec_id, ROUND({_SCORE_SQL}, 6) AS score,
+    SELECT vec_id, ROUND({SIGMOID_SCORE_SQL}, 6) AS score,
            2.0 ** label - 1.0 AS gain, label
     FROM embeddings
 ), model_top AS (

@@ -34,12 +34,7 @@ from pyspark.sql import functions as F
 from ..sources.catalog import load_table
 from ..operators.ranks import constant_partition_key
 from .analytics import load_events
-
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
+from .columns import dec_sum
 
 
 # ---------------------------------------------------------------------------
@@ -175,7 +170,7 @@ def value_acf_frame(ev: DataFrame) -> DataFrame:
         F.expr("ts_sec DIV 86400").alias("day"),
     )
     mu = e.groupBy("event_type").agg(
-        (_dec_sum(F.col("value")).cast("double") / F.count(F.lit(1))).alias(
+        (dec_sum(F.col("value"), 6).cast("double") / F.count(F.lit(1))).alias(
             "mu"
         )
     )
@@ -192,9 +187,9 @@ def value_acf_frame(ev: DataFrame) -> DataFrame:
         ],
     )
     agg = lagged.groupBy("event_type").agg(
-        _dec_sum(F.col("dd")).cast("double").alias("den"),
+        dec_sum(F.col("dd"), 6).cast("double").alias("den"),
         *[
-            _dec_sum(F.col(f"p{k}")).cast("double").alias(f"num{k}")
+            dec_sum(F.col(f"p{k}"), 6).cast("double").alias(f"num{k}")
             for k in _ACF_LAGS
         ],
     )
@@ -407,7 +402,7 @@ def token_entropy_frame(docs: DataFrame) -> DataFrame:
     )
     return (
         terms.groupBy("lang")
-        .agg((-_dec_sum(F.col("plogp"))).cast("double").alias("entropy"))
+        .agg((-dec_sum(F.col("plogp"), 6)).cast("double").alias("entropy"))
         .join(tot, "lang")
         .select(
             "lang",

@@ -30,12 +30,7 @@ from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
 from .analytics import load_events
-
-
-def _dec_sum(col: F.Column, scale: int = 6) -> F.Column:
-    """Partition-order-independent sum (plans/analytics.py::_dec_sum
-    discipline, redefined locally for import-order independence)."""
-    return F.sum(col.cast(f"decimal(30,{scale})"))
+from .columns import dec_sum
 
 
 # ---------------------------------------------------------------------------
@@ -131,7 +126,7 @@ def ranking_rbo(spark: SparkSession, sf: str) -> DataFrame:
     return terms.agg(
         F.lit(_RRF_LIST).cast("int").alias("depth"),
         F.round(
-            (1.0 - _RBO_P) * _dec_sum(F.col("term"), 9).cast("double"), 6
+            (1.0 - _RBO_P) * dec_sum(F.col("term"), 9).cast("double"), 6
         ).alias("rbo"),
     )
 
@@ -193,7 +188,7 @@ def value_trend_frame(ev: DataFrame) -> DataFrame:
         F.sum((F.col("x") * F.col("x")).cast("decimal(38,0)"))
         .cast("double")
         .alias("sxx"),
-        _dec_sum(F.col("y")).cast("double").alias("sy"),
+        dec_sum(F.col("y"), 6).cast("double").alias("sy"),
         F.sum(F.round(F.col("x") * F.col("y"), 4).cast("decimal(38,4)"))
         .cast("double")
         .alias("sxy"),
@@ -267,11 +262,11 @@ def value_cusum_frame(ev: DataFrame) -> DataFrame:
     )
     daily = e.groupBy("event_type", "day").agg(
         F.round(
-            _dec_sum(F.col("value")).cast("double") / F.count(F.lit(1)), 6
+            dec_sum(F.col("value"), 6).cast("double") / F.count(F.lit(1)), 6
         ).alias("xbar")
     )
     mu = daily.groupBy("event_type").agg(
-        (_dec_sum(F.col("xbar")).cast("double") / F.count(F.lit(1))).alias(
+        (dec_sum(F.col("xbar"), 6).cast("double") / F.count(F.lit(1))).alias(
             "mu"
         ),
         F.count(F.lit(1)).alias("n_days"),
@@ -375,7 +370,7 @@ def dow_uniformity_frame(ev: DataFrame) -> DataFrame:
         terms.groupBy("event_type")
         .agg(
             F.max("n").cast("long").alias("n"),
-            F.round(_dec_sum(F.col("term")).cast("double"), 6).alias("chi2"),
+            F.round(dec_sum(F.col("term"), 6).cast("double"), 6).alias("chi2"),
         )
         .orderBy("event_type")
     )

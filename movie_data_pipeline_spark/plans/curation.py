@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from ..functions.text import bpe_ish_tokens
 from ..operators.decontam import benchmark_decontamination
 from ..sources.catalog import load_table
+from .columns import dec_sum
 
 
 # ---------------------------------------------------------------------------
@@ -192,7 +193,6 @@ def curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions import text as TX
-    from .analytics import _dec_sum
 
     docs = load_table(spark, sf, "documents")
     gated = (
@@ -215,7 +215,7 @@ def curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
             F.sum(F.size("_ws")).alias("total_tokens"),
             (
                 F.round(
-                    _dec_sum(F.col("quality"), 6).cast("double")
+                    dec_sum(F.col("quality"), 6).cast("double")
                     / F.count(F.lit(1)),
                     4,
                 )
@@ -376,7 +376,7 @@ def charlm_doc_scores(spark: SparkSession, sf: str) -> DataFrame:
     Everything is exact relational algebra, so the whole stage —
     trigram extraction, model fit, scoring — has a DuckDB SQL twin and
     hash-matches: per-gram log-probs round to 6 decimals before an
-    exact decimal sum (partition-order-independent, the `_dec_sum`
+    exact decimal sum (partition-order-independent, the `dec_sum`
     discipline), so float summation order can't flip the hash.
 
     Scale shape: the explode's ≈doc-length rows immediately collapse
@@ -392,8 +392,6 @@ def charlm_doc_scores(spark: SparkSession, sf: str) -> DataFrame:
     rounded log-prob: Σ round(lp,6) over instances = Σ n·round(lp,6).
     """
     from pyspark.sql import Window
-
-    from .analytics import _dec_sum
 
     docs = load_table(spark, sf, "documents")
     norm = F.regexp_replace(F.lower(F.col("text")), "[^a-z ]", "")
@@ -432,7 +430,7 @@ def charlm_doc_scores(spark: SparkSession, sf: str) -> DataFrame:
         F.sum("n").alias("n_grams"),
         (
             F.round(
-                -_dec_sum(F.col("lp") * F.col("n"), 6).cast("double")
+                -dec_sum(F.col("lp") * F.col("n"), 6).cast("double")
                 / F.sum("n"),
                 4,
             )

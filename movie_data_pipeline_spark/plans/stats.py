@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
-from .analytics import _dec_sum
+from .columns import dec_sum, sigmoid_score
 
 
 def price_discount_corr(spark: SparkSession, sf: str) -> DataFrame:
@@ -28,8 +28,8 @@ def price_discount_corr(spark: SparkSession, sf: str) -> DataFrame:
     x, y = F.col("l_extendedprice"), F.col("l_discount")
     agg = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"),
-        _dec_sum(x, 8).alias("sx"),
-        _dec_sum(y, 8).alias("sy"),
+        dec_sum(x, 8).alias("sx"),
+        dec_sum(y, 8).alias("sy"),
         F.sum((x * y).cast("decimal(38,8)")).alias("sxy"),
         F.sum((x * x).cast("decimal(38,8)")).alias("sxx"),
         F.sum((y * y).cast("decimal(38,8)")).alias("syy"),
@@ -88,7 +88,7 @@ def price_histogram(spark: SparkSession, sf: str) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
-            F.round(_dec_sum(F.col("l_extendedprice")).cast("double"), 2).alias(
+            F.round(dec_sum(F.col("l_extendedprice"), 4).cast("double"), 2).alias(
                 "bin_revenue"
             ),
         )
@@ -722,7 +722,7 @@ def value_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("event_type", "rep")
         .agg(
             (
-                _dec_sum(F.col("value"), 6).cast("double") / F.count(F.lit(1))
+                dec_sum(F.col("value"), 6).cast("double") / F.count(F.lit(1))
             ).alias("rep_mean")
         )
     )
@@ -788,22 +788,8 @@ ORDER BY event_type
 
 def embedding_model_scores(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
-    dim = 64
-    # fixed "model": w_j alternates sign and decays with j (1-based)
-    w = [((-1.0) ** j) / (j + 1.0) for j in range(dim)]
-    w_col = F.array(*[F.lit(float(x)) for x in w])
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("embedding").cast("array<double>"),
-            w_col,
-            lambda a, b: a * b,
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    score = 1.0 / (1.0 + F.exp(-dot))
     return (
-        emb.select(F.floor(score * 10).cast("int").alias("score_decile"))
+        emb.select(F.floor(sigmoid_score() * 10).cast("int").alias("score_decile"))
         .groupBy("score_decile")
         .agg(F.count(F.lit(1)).alias("n_vectors"))
         .orderBy("score_decile")
@@ -1079,7 +1065,7 @@ def price_decile_profile(spark: SparkSession, sf: str) -> DataFrame:
             F.round(F.min("l_extendedprice"), 2).alias("lo_price"),
             F.round(F.max("l_extendedprice"), 2).alias("hi_price"),
             F.round(
-                _dec_sum(F.col("l_extendedprice"), 6).cast("double")
+                dec_sum(F.col("l_extendedprice"), 6).cast("double")
                 / F.count(F.lit(1)),
                 4,
             ).alias("mean_price"),

@@ -27,7 +27,8 @@ from pyspark.sql import functions as F
 
 from ..session import shuffle_parallelism
 from ..sources.catalog import load_table
-from .analytics import _dec_sum, load_events
+from .analytics import load_events
+from .columns import dec_sum
 
 _US_PER_DAY = 86_400_000_000
 
@@ -46,7 +47,7 @@ def events_gapfill_locf(spark: SparkSession, sf: str) -> DataFrame:
     daily = ev.groupBy("event_type", "day_idx").agg(
         (
             F.round(
-                _dec_sum(F.col("value"), 6).cast("double") / F.count("value"), 2
+                dec_sum(F.col("value"), 6).cast("double") / F.count("value"), 2
             )
             + 0.0
         ).alias("day_avg")
@@ -317,7 +318,7 @@ def incremental_daily_agg(spark: SparkSession, sf: str) -> DataFrame:
     5 days as the "new batch") is derived in-plan from a 1-row MAX
     aggregate (broadcast, no driver scalar).
 
-    Decimal discipline: value sums use `_dec_sum`, so the merge is
+    Decimal discipline: value sums use `dec_sum`, so the merge is
     bit-stable no matter how the rows were partitioned between state
     and batch — the property float sums would lose."""
     e = load_events(spark, sf).select(
@@ -335,7 +336,7 @@ def incremental_daily_agg(spark: SparkSession, sf: str) -> DataFrame:
     def partial(df: DataFrame) -> DataFrame:
         return df.groupBy("day_idx", "event_type").agg(
             F.count(F.lit(1)).alias("n_events"),
-            _dec_sum(F.col("value"), 6).alias("sum_value"),
+            dec_sum(F.col("value"), 6).alias("sum_value"),
         )
 
     merged = (

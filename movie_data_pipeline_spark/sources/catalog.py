@@ -1,4 +1,4 @@
-"""Testdata catalog: load the driver's parquet corpus and register views.
+"""Testdata catalog: load the driver's parquet corpus.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings. Parquet scans get column pruning
@@ -11,8 +11,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import TESTDATA_TABLES
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -37,15 +35,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ):
         df = df.withColumn("embedding", df["embedding"].cast("array<float>"))
     return df
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: tuple[str, ...] = TESTDATA_TABLES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view; returns name → DataFrame."""
-    out: dict[str, DataFrame] = {}
-    for name in tables:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

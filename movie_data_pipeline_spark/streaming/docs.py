@@ -89,9 +89,8 @@ def _cached_index_parts(
     """Union of the index's batch_id=* partitions except
     ``exclude_batch_id``, served from per-partition persisted
     DataFrames re-read only on signature change. Returns None when no
-    partition dir exists (caller treats as empty index) OR when the
-    dir count exceeds the cache bound (caller falls back to the plain
-    root read)."""
+    partition dir can be listed OR when the dir count exceeds the cache
+    bound; the caller then falls back to the plain root read."""
     app_id = spark.sparkContext.applicationId
     for k in [k for k in _INDEX_PART_CACHE if k[0] != app_id]:
         _INDEX_PART_CACHE.pop(k)  # dead-session handles: just drop
@@ -103,7 +102,9 @@ def _cached_index_parts(
             for name in os.listdir(index_path)
             if name.startswith("batch_id=")
         }
-    except FileNotFoundError:
+    except OSError:
+        # missing root, a root that is not a directory, or a dir that
+        # vanished mid-listing: the caller's plain root read decides
         dirs = {}
     if not dirs or len(dirs) > _INDEX_CACHE_MAX_DIRS:
         # beyond the bound the packed root scan wins (measured) and

@@ -545,6 +545,23 @@ def test_parallel_multi_row_number_rejects_bad_specs(spark):
         parallel_multi_row_number(clash, [("v", ["_mrb0"], "i")])
 
 
+
+def test_parallel_multi_row_number_rejects_empty_specs(spark):
+    """An empty spec list is a caller error, reported as such before
+    the fused bounds aggregate is built (df.agg() with no columns
+    fails with an unrelated message)."""
+    import pytest
+
+    from movie_data_pipeline_spark.operators.ranks import (
+        parallel_multi_row_number,
+    )
+
+    df = spark.createDataFrame([(1, 2)], ["k", "v"])
+    with pytest.raises(ValueError, match="specs is empty"):
+        parallel_multi_row_number(df, [])
+    with pytest.raises(ValueError, match="specs is empty"):
+        parallel_multi_row_number(df, iter(()))
+
 def test_phrase_regexp_count_equals_array_form(spark):
     """r15: phrase_match_counts' regexp_count formulation must count
     exactly what the array formulation counted — whole-token matches

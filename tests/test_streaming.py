@@ -1752,6 +1752,20 @@ def test_cached_index_parts_mtime_keyed(spark, tmp_path):
     ) is None
 
 
+
+def test_cached_index_parts_root_is_a_file(spark, tmp_path):
+    """An index root that cannot be listed as a directory (here a
+    regular file) is no cache hit: the cache returns None, keeps no
+    entry for the root, and leaves the decision to the caller's plain
+    root read instead of raising NotADirectoryError."""
+    from movie_data_pipeline_spark.streaming import docs as SD
+
+    root = tmp_path / "index"
+    root.write_text("not a directory")
+    assert SD._cached_index_parts(spark, str(root), exclude_batch_id=0) is None
+    key = (spark.sparkContext.applicationId, str(root))
+    assert key not in SD._INDEX_PART_CACHE
+
 def test_cached_index_parts_bound_disables_cache(spark, tmp_path):
     """r15 review fix: past _INDEX_CACHE_MAX_DIRS partition dirs the
     cache disables itself (returns None, unpersists everything) — the
