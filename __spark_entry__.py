@@ -25,11 +25,14 @@ def _hardened(builder: Callable[[SparkSession, str], DataFrame]):
     """Pin the session confs the plans assume, whatever session the
     driver hands us: UTC (temporal extraction and timestamp literals
     are session-timezone-dependent in Spark; the DuckDB oracle is
-    tz-naive/UTC) and Arrow for the pandas-UDF boundary."""
+    tz-naive/UTC), Arrow for the pandas-UDF boundary, and raw int64
+    reads of a TIMESTAMP(NANOS) ``events.ts`` (``session.get_spark``
+    sets the same three)."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return builder(spark, sf_dir)
 
     return wrapped

@@ -50,9 +50,10 @@ def load_events(spark: SparkSession, sf: str) -> DataFrame:
     type ``ts`` carries — the driver testdata has shipped it as both
     parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS):
 
-    - TIMESTAMP(NANOS): Spark 4 rejects it by default; read as raw
-      nanos (LongType) and derive µs/sec with integer DIV (ns epochs
-      exceed 2^53 — double math would corrupt them).
+    - TIMESTAMP(NANOS): Spark 4 rejects it by default; the session
+      reads it as raw nanos (LongType, ``nanosAsLong`` set in
+      ``session.get_spark``) and this derives µs/sec with integer DIV
+      (ns epochs exceed 2^53 — double math would corrupt them).
     - TIMESTAMP(MICROS) as TIMESTAMP_NTZ: ``timestampdiff`` from the
       NTZ epoch is timezone-independent wall-clock-as-UTC micros —
       exactly DuckDB's ``epoch_us(ts)``.
@@ -60,7 +61,6 @@ def load_events(spark: SparkSession, sf: str) -> DataFrame:
 
     All downstream event queries consume ``ts_us``/``ts_sec`` only,
     never raw ``ts``, so the physical type is contained here."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = load_table(spark, sf, "events")
     ts_type = dict(df.dtypes)["ts"]
     if ts_type == "bigint":

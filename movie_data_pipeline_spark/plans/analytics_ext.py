@@ -14,6 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.asof import asof_join
 from ..sources.catalog import load_table
@@ -404,15 +405,16 @@ FROM documents
 # Winnowing fingerprints are index state (one expensive UDF pass over
 # the corpus, tiny output): build the parquet index once per corpus and
 # answer pair queries from it. Round 1 re-fingerprinted per invocation.
-_WINNOW_INDEX_PATHS: dict[str, str] = {}
+# The writer's schema is kept next to the path, so a re-read runs no
+# footer-reading job.
+_WINNOW_INDEX_PATHS: dict[str, tuple[str, StructType]] = {}
 
 
 def _winnow_index(spark: SparkSession, sf: str) -> DataFrame:
     import hashlib
     import os
 
-    path = _WINNOW_INDEX_PATHS.get(sf)
-    if path is None:
+    if sf not in _WINNOW_INDEX_PATHS:
         from ..operators.dedup import winnow_fingerprints
 
         tag = hashlib.md5(sf.encode()).hexdigest()[:10]
@@ -422,14 +424,11 @@ def _winnow_index(spark: SparkSession, sf: str) -> DataFrame:
             f"winnow_{tag}",
         )
         docs = load_table(spark, sf, "documents")
-        (
-            winnow_fingerprints(docs)
-            .select("doc_id", "fingerprints")
-            .write.mode("overwrite")
-            .parquet(path)
-        )
-        _WINNOW_INDEX_PATHS[sf] = path
-    return spark.read.parquet(path)
+        index = winnow_fingerprints(docs).select("doc_id", "fingerprints")
+        index.write.mode("overwrite").parquet(path)
+        _WINNOW_INDEX_PATHS[sf] = path, index.schema
+    path, schema = _WINNOW_INDEX_PATHS[sf]
+    return spark.read.schema(schema).parquet(path)
 
 
 def winnow_pairs(spark: SparkSession, sf: str) -> DataFrame:

@@ -20,6 +20,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.graph import pagerank
 from ..sources.catalog import load_table
@@ -38,10 +39,12 @@ from ..sources.catalog import load_table
 # queries) unpersists every RDD block, which would strand a
 # localCheckpoint-backed memo. Only the WEIGHTED pairs are stored —
 # the unweighted relation is its projection, so one materialization
-# serves all variants. Ints only → parquet round-trip is exact.
+# serves all variants. Ints only → parquet round-trip is exact. The
+# writer's schema is kept next to the path, so a re-read runs no
+# footer-reading job.
 # ---------------------------------------------------------------------------
 
-_PAIRS_CACHE: dict[tuple[str, str], str] = {}
+_PAIRS_CACHE: dict[tuple[str, str], tuple[str, StructType]] = {}
 
 
 def _trade_pairs_weighted(spark: SparkSession, sf: str) -> DataFrame:
@@ -53,8 +56,7 @@ def _trade_pairs_weighted(spark: SparkSession, sf: str) -> DataFrame:
     0 and supplier 0 share node 0 — a known, deterministic quirk both
     engines reproduce identically)."""
     key = (spark.sparkContext.applicationId, str(sf))
-    path = _PAIRS_CACHE.get(key)
-    if path is None:
+    if key not in _PAIRS_CACHE:
         orders = load_table(spark, sf, "orders").select(
             "o_orderkey", "o_custkey"
         )
@@ -75,8 +77,9 @@ def _trade_pairs_weighted(spark: SparkSession, sf: str) -> DataFrame:
         path = tempfile.mkdtemp(prefix="trade_pairs_")
         derived.write.mode("overwrite").parquet(path)
         atexit.register(shutil.rmtree, path, ignore_errors=True)
-        _PAIRS_CACHE[key] = path
-    return spark.read.parquet(path)
+        _PAIRS_CACHE[key] = path, derived.schema
+    path, schema = _PAIRS_CACHE[key]
+    return spark.read.schema(schema).parquet(path)
 
 
 def _trade_pairs(spark: SparkSession, sf: str) -> DataFrame:

@@ -12,6 +12,17 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, at most 16g. The driver heap
+    grows lazily toward its cap, so a cap above what the host has lets
+    one long session starve a neighbouring JVM until it is killed."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):  # no sysconf: not POSIX
+        return "16g"
+    return f"{min(16 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "movie_data_pipeline_spark",
     shuffle_partitions: int | None = None,
@@ -19,7 +30,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores).
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: all cores);
+    ``SPARK_DRIVER_MEMORY`` overrides ``default_driver_memory()``.
     On a real cluster, master/memory come from spark-submit; everything
     set here is cluster-safe.
     """
@@ -41,8 +53,14 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         # serve COUNT/MIN/MAX-only scans from parquet footer statistics
         .config("spark.sql.parquet.aggregatePushdown", "true")
+        # a TIMESTAMP(NANOS) parquet column reads as its raw int64
+        # instead of failing the scan (plans/analytics.py::load_events)
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY", default_driver_memory()),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

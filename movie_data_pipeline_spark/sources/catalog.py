@@ -12,26 +12,20 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schemas import TESTDATA
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one testdata table, normalizing the physical types the
-    driver corpus has drifted on across rounds (events.ts changed
-    nanos→micros in round 3; guard the other likely drifts the same
-    way so every operator sees one stable logical schema):
+    """Load one testdata table with its declared schema
+    (``schemas.TESTDATA``), so the read runs no Spark job to infer it.
 
-    - ``embeddings.embedding`` → ``array<float>`` (the ANN family's
-      expected element type; a future array<double> shipment would
-      silently change cosine math otherwise),
-    - ``embeddings.label`` → ``int`` kept as shipped (int32) — only
-      the vector element type matters downstream.
+    A shipment whose physical types drift from the declaration fails
+    loudly when the scan runs (e.g. ``array<double>`` embeddings read
+    as the declared ``array<float>``); the schema test pins the
+    declarations against every corpus first.
 
-    ``events.ts`` is intentionally NOT normalized here: epoch-unit
-    conversion needs type-specific integer math, which
-    ``plans/analytics.py::load_events`` owns."""
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-    if name == "embeddings" and dict(df.dtypes).get("embedding") not in (
-        None,
-        "array<float>",
-    ):
-        df = df.withColumn("embedding", df["embedding"].cast("array<float>"))
-    return df
+    ``events`` is read with inference: ``plans/analytics.py::load_events``
+    needs the physical type of ``ts`` to pick its epoch arithmetic."""
+    schema = TESTDATA[name]
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))

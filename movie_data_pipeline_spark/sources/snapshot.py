@@ -24,6 +24,13 @@ for Spark's file-based world:
   same publish call — and is only safe when no reader can overlap a
   publish.)
 
+Each commit also records every table's schema (``df.schema`` as JSON):
+in the manifest for the live version and in ``v{N}/_SCHEMAS.json`` for
+time-travel reads. Readers pass it to the parquet reader, so a read
+runs no footer-reading Spark job to infer what the writer already
+knew. A manifest committed before schemas were recorded still reads,
+with inference.
+
 This is the same pointer-swap design Delta/Iceberg use for their
 transaction log tip, reduced to the single-pointer case: no history
 log, just last-committed-wins. On an object store the ``os.replace``
@@ -38,8 +45,10 @@ import os
 from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 MANIFEST = "_MANIFEST.json"
+SCHEMAS = "_SCHEMAS.json"
 
 
 def _manifest_path(root: str) -> str:
@@ -80,22 +89,30 @@ def publish_snapshot(
     os.makedirs(root, exist_ok=True)
     version = snapshot_version(root) + 1
     vdir = f"v{version}"
+    schemas = {}
     for name, df in tables.items():
         df.write.mode("overwrite").parquet(os.path.join(root, vdir, name))
+        schemas[name] = df.schema.jsonValue()
+    _write_json(os.path.join(root, vdir, SCHEMAS), schemas)
     manifest = {
         "version": version,
         "tables": {name: f"{vdir}/{name}" for name in tables},
+        "schemas": schemas,
     }
     # commit: write-then-rename so the pointer file is never observed
     # half-written, and the swap itself is a single atomic replace
     tmp = _manifest_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1)
-        f.flush()
-        os.fsync(f.fileno())
+    _write_json(tmp, manifest)
     os.replace(tmp, _manifest_path(root))
     _prune_versions(root, version, keep_versions)
     return version
+
+
+def _write_json(path: str, obj: dict) -> None:
+    with open(path, "w") as f:
+        json.dump(obj, f, indent=1)
+        f.flush()
+        os.fsync(f.fileno())
 
 
 def _prune_versions(root: str, live_version: int, keep_versions: int) -> None:
@@ -135,7 +152,8 @@ def read_snapshot_table(
     if version is None or version == m["version"]:
         if name not in m["tables"]:
             raise KeyError(f"table {name!r} not in snapshot v{m['version']}")
-        return spark.read.parquet(os.path.join(root, m["tables"][name]))
+        path = os.path.join(root, m["tables"][name])
+        return _read(spark, path, m.get("schemas", {}).get(name))
     if version > m["version"]:
         raise FileNotFoundError(
             f"version {version} not committed (live is v{m['version']})"
@@ -146,7 +164,20 @@ def read_snapshot_table(
             f"snapshot v{version} of {name!r} pruned or absent "
             f"(retention window passed it; live is v{m['version']})"
         )
-    return spark.read.parquet(path)
+    try:
+        with open(os.path.join(root, f"v{version}", SCHEMAS)) as f:
+            schema = json.load(f).get(name)
+    except FileNotFoundError:  # committed before schemas were recorded
+        schema = None
+    return _read(spark, path, schema)
+
+
+def _read(spark: SparkSession, path: str, schema: dict | None) -> DataFrame:
+    """Read a published table with its recorded schema; a table
+    committed without one is read with inference."""
+    if schema is None:
+        return spark.read.parquet(path)
+    return spark.read.schema(T.StructType.fromJson(schema)).parquet(path)
 
 
 def available_versions(root: str) -> list[int]:

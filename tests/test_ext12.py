@@ -115,9 +115,10 @@ def test_pareto_and_weighted_median_planted(spark, tmp_path):
 
     # prices 1 (qty 3), 2 (qty 1), 5 (qty 4): W=8, half=4 → cum at
     # price 1 is 3 (<4), at price 2 is 4 (crosses) → median 2
+    # the corpus's physical types: load_table reads the declared schema
     li = spark.createDataFrame(
         [(1, 1, 1.0, 3.0), (1, 2, 2.0, 1.0), (1, 3, 5.0, 4.0)],
-        ["l_orderkey", "l_linenumber", "l_extendedprice", "l_quantity"],
+        "l_orderkey bigint, l_linenumber int, l_extendedprice double, l_quantity double",
     )
     li.write.parquet(str(d / "lineitem.parquet"))
     m = weighted_median_price(spark, str(d)).collect()[0]
