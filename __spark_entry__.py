@@ -27,7 +27,10 @@ def _hardened(builder: Callable[[SparkSession, str], DataFrame]):
     are session-timezone-dependent in Spark; the DuckDB oracle is
     tz-naive/UTC), Arrow for the pandas-UDF boundary, and raw int64
     reads of a TIMESTAMP(NANOS) ``events.ts`` (``session.get_spark``
-    sets the same three)."""
+    sets the same three). ``get_spark``'s codegen cache size is not
+    pinned here: it is a static conf, fixed when the driver's session
+    started, and it changes only how often generated code is
+    recompiled, never the rows."""
 
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")

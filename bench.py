@@ -174,10 +174,13 @@ def slow_early_stop(times: list[float], slow_cutoff: float) -> bool:
     """Whether the slow-query rep loop may stop after ``times`` reps:
     only when the best rep exceeds ``slow_cutoff`` AND the newest rep
     failed to improve the prior best by >10% (converged). A rep still
-    improving >10% is re-JIT warm-up, not intrinsic plan cost — the
-    r13 A/B measured dsir_importance_weights at [3.06, 2.20, 1.78]
-    after full-registry codegen eviction, and the old unconditional
-    break at i>=1 froze its bench reading at the min-of-2 ≈ 3.0."""
+    improving >10% is still warming up, not intrinsic plan cost — the
+    r13 A/B measured dsir_importance_weights at [3.06, 2.20, 1.78] in
+    a session whose JVM-wide codegen cache held 100 classes against a
+    registry of about 4,160, so each run recompiled its generated code,
+    and the old unconditional break at i>=1 froze its bench reading at
+    the min-of-2 ≈ 3.0. ``session.get_spark`` now sizes that cache to
+    hold the registry's working set."""
     return (
         len(times) >= 2
         and min(times) > slow_cutoff
@@ -323,7 +326,8 @@ def main() -> None:
         name: q for name, q in QUERIES.items() if not name.endswith("_check")
     }
 
-    # pass 1 (untimed): codegen + parquet footer caches per query
+    # pass 1 (untimed): compiles each query's generated code into the
+    # JVM-wide codegen cache, which get_spark sizes to hold the registry
     for name, (builder, _) in bench_queries.items():
         builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
     # drop data caches so per-query numbers don't ride earlier persists
@@ -354,10 +358,11 @@ def main() -> None:
     def timed_min(builder) -> float:
         """Min-of-reps with the slow-query early stop, which (r13 A/B,
         BASELINE.md round-13) must only fire once the readings have
-        CONVERGED: in a session that has executed the whole registry,
-        a codegen-heavy query's compiled code is evicted and its first
-        reps pay a multi-second re-JIT (dsir_importance_weights read
-        [3.06, 2.20, 1.78] fresh — the old `best > cutoff at i>=1`
+        CONVERGED: Spark's JVM-wide codegen cache held 100 classes by
+        default, against about 4,160 for the whole registry, so every
+        rep recompiled its generated code and the JIT rewarmed it
+        (dsir_importance_weights read [3.06, 2.20, 1.78]; get_spark now
+        sizes the cache to the working set) — the old `best > cutoff at i>=1`
         break froze it at the still-converging min-of-2 ≈ 3.0 for two
         rounds). A rep that improved the prior best by >10% means the
         query is still warming, not intrinsically slow — keep going.

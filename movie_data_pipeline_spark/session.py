@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# ~2x the 4,171 classes a first registry pass compiles at sf0.01; at 100 each op recompiles
+CODEGEN_CACHE_ENTRIES = 8192
+
 
 def default_driver_memory() -> str:
     """Half the host's physical memory, at most 16g. The driver heap
@@ -56,6 +59,7 @@ def get_spark(
         # a TIMESTAMP(NANOS) parquet column reads as its raw int64
         # instead of failing the scan (plans/analytics.py::load_events)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",

@@ -195,9 +195,11 @@ def test_uniform_drift_calib_normalized():
 
 
 def test_slow_early_stop_requires_convergence():
-    """r13 A/B finding: after full-registry codegen eviction, a
-    codegen-heavy query re-JITs across its first reps (dsir measured
-    [3.06, 2.20, 1.78] fresh). The slow-query early stop must not fire
+    """r13 A/B finding: with Spark's default 100-entry JVM-wide codegen
+    cache against a registry of about 4,160 classes, a query recompiled
+    and re-JITed its generated code across its first reps (dsir measured
+    [3.06, 2.20, 1.78]); ``session.get_spark`` now sizes the cache to
+    hold the working set. The slow-query early stop must not fire
     while reps are still improving >10% — the old unconditional break
     recorded the min-of-2 ≈ 3.0 as plan cost for two rounds."""
     from bench import slow_early_stop

@@ -1,5 +1,5 @@
-"""The A/B tool's revision loader and equality gate, and the growth
-tool's K× warehouse builder."""
+"""The A/B tool's revision loader, equality gate and compile counts, and
+the growth tool's K× warehouse builder."""
 
 from __future__ import annotations
 
@@ -45,6 +45,36 @@ def test_equality_gate_flags_one_differing_value(spark):
     assert diff is not None and "1.25" in diff and "1.5" in diff
     renamed = spark.createDataFrame(rows, "k long, s string, y double")
     assert "columns differ" in ab.gate(base, ab.rows_key(renamed))
+
+
+def test_ab_reports_compiles_per_variant(spark, capsys):
+    """A plan that inlines a per-run literal recompiles on every timed
+    run; the same plan with a fixed literal reuses the classes the gate
+    compiled. The A/B record counts both."""
+    import argparse
+    import itertools
+    import json
+
+    from movie_data_pipeline_spark.session import clear_state
+    from tools import ab
+
+    fresh = itertools.count(10**6)
+
+    def build(cut):
+        return lambda s, sf: s.range(500).filter(F.col("id") < F.lit(cut()))
+
+    variants = {
+        "old": ({"e": (build(lambda: next(fresh)), None)}, clear_state),
+        "new": ({"e": (build(lambda: 10**6), None)}, clear_state),
+    }
+    args = argparse.Namespace(rev="HEAD", sf_dir=SF, reps=3, entries=["e"])
+    assert ab.run(spark, args, "old_pkg", variants) == 0
+    out = capsys.readouterr().out
+    assert "compiles old" in out
+    rec = json.loads(out[out.index("\n{") + 1:])["results"]["e"]
+    assert rec["status"] == "equal" and rec["rows"] == 500
+    assert rec["old_compiles"] >= args.reps
+    assert rec["new_compiles"] == 0
 
 
 def test_growth_builder_doubles_facts_keeps_dimensions(spark, tmp_path):

@@ -20,15 +20,20 @@ Per entry, looked up by name in both revisions' QUERIES:
    variants (code generation, parquet footers).
 2. ``--reps`` interleaved rounds (old, new, old, new, ...) into the
    noop sink, calling each package's own ``session.clear_state``
-   after every run. Reported: min and median per variant.
+   after every run. Reported: min and median per variant, and the
+   classes Janino compiled over the variant's timed runs
+   (``CodegenMetrics``; 0 once the gate has warmed the codegen cache,
+   so a count above that is a plan that recompiles on every run).
 
 The run records the 1-minute loadavg at start and end and the share
 of busy CPU time the hypervisor stole over the whole run: a steal
 burst hits both variants alike, but it widens the spread.
 
-Both variants share one SparkSession, so a change to session conf
-cannot be compared here; perfbench (its own processes per revision)
-covers those. Exit status is 1 if any entry failed its gate or errored.
+Both variants share one SparkSession, built by the live tree's
+``session.get_spark``, so a change to session conf (the codegen cache
+size, say) cannot be compared here; perfbench (its own processes per
+revision) and the compile count cover those. Exit status is 1 if any
+entry failed its gate or errored.
 """
 
 from __future__ import annotations
@@ -141,20 +146,27 @@ def main(argv: list[str] | None = None) -> int:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def compile_count(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    cm = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return cm.METRIC_COMPILATION_TIME().getCount()
+
+
 def run(spark, args, name: str, variants: dict) -> int:
     load_start = round(os.getloadavg()[0], 2)
     steal0, busy0 = read_proc_stat()
     entries = args.entries or list(variants["new"][0])
 
-    def timed(variant: str, entry: str) -> float:
+    def timed(variant: str, entry: str) -> tuple[float, int]:
         queries, clear = variants[variant]
+        c0 = compile_count(spark)
         t0 = time.perf_counter()
         queries[entry][0](spark, args.sf_dir).write.format("noop").mode(
             "overwrite"
         ).save()
         dt = time.perf_counter() - t0
         clear(spark)
-        return dt
+        return dt, compile_count(spark) - c0
 
     results: dict[str, dict] = {}
     for entry in entries:
@@ -174,9 +186,12 @@ def run(spark, args, name: str, variants: dict) -> int:
                 print(f"{entry}: MISMATCH {diff}", flush=True)
                 continue
             times: dict[str, list[float]] = {"old": [], "new": []}
+            compiles = {"old": 0, "new": 0}
             for _ in range(args.reps):
                 for v in ("old", "new"):
-                    times[v].append(timed(v, entry))
+                    dt, n = timed(v, entry)
+                    times[v].append(dt)
+                    compiles[v] += n
         except Exception as e:  # report and go on to the next entry
             traceback.print_exc()
             results[entry] = {"status": "error", "error": f"{type(e).__name__}: {e}"[:500]}
@@ -189,6 +204,7 @@ def run(spark, args, name: str, variants: dict) -> int:
                 rec[v] = [round(x, 3) for x in times[v]]
                 rec[f"{v}_min"] = round(min(times[v]), 3)
                 rec[f"{v}_median"] = round(statistics.median(times[v]), 3)
+                rec[f"{v}_compiles"] = compiles[v]
             rec["new_faster_reps"] = sum(
                 b < a for a, b in zip(times["old"], times["new"])
             )
@@ -196,6 +212,7 @@ def run(spark, args, name: str, variants: dict) -> int:
                 f"; old min {rec['old_min']:.3f} median {rec['old_median']:.3f}"
                 f" | new min {rec['new_min']:.3f} median {rec['new_median']:.3f}"
                 f" s; new faster in {rec['new_faster_reps']}/{args.reps}"
+                f"; compiles old {rec['old_compiles']} new {rec['new_compiles']}"
             )
         results[entry] = rec
         print(line, flush=True)
