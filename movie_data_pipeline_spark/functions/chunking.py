@@ -4,14 +4,12 @@ one-row-to-N-rows generator surface the reference has no analogue for
 documents into token windows is the standard pre-tokenization step
 for LLM training corpora.
 
-Two generators:
+Fixed-stride token windows need no generator: the registry's
+``chunk_docs`` entry serves them as an all-native slice/transform plan
+(an Arrow UDTF measured 1.68 s vs 0.55 s native at sf0.1 — per-batch
+Arrow string conversion dominates a trivial generator). One generator
+remains:
 
-- ``chunk_tokens`` — fixed-stride token windows. For this shape an
-  all-native slice/transform plan exists too (and the registry's
-  ``chunk_docs`` entry serves it: the r11 clean bench measured this
-  Arrow UDTF at 1.68 s vs 0.55 s native at sf0.1 — per-batch Arrow
-  string conversion dominates a trivial generator). The UDTF stays
-  registered and unit-tested as the simplest instance of the surface.
 - ``chunk_sentences`` — sentence-boundary chunking with a greedy
   token budget and configurable sentence overlap, the shape real
   training pipelines use so windows don't cut sentences mid-thought.
@@ -21,7 +19,7 @@ Two generators:
   sequential per document — native Column algebra has no fold that
   emits variable-length windows, while the DuckDB oracle expresses
   the same definition as a recursive CTE over sentence prefix sums
-  (plans/analytics_ext17.py).
+  (plans/text.py::chunk_docs_sentences).
 
 Sentence semantics are pinned to be engine-portable (RE2 has no
 lookbehind, so no ``(?<=[.!?])`` splits): a boundary is a character
@@ -45,24 +43,6 @@ _BOUNDARY = re.compile(r"([.!?])[ \t\r\n]+")
 _TOKEN_SPLIT = re.compile(_WS)
 
 
-# useArrow: without it the lateral join runs as BatchEvalPythonUDTF —
-# row-at-a-time pickling, the one Python boundary in the repo that
-# wasn't Arrow-batched (caught by tests/test_plan_invariants.py; the
-# PLANS.md "only Arrow surfaces" claim was wrong for this node until
-# round 11)
-@udtf(returnType="chunk_idx int, chunk string, chunk_tokens int", useArrow=True)
-class ChunkTokensUDTF:
-    """eval(text, chunk_size) → one row per chunk_size-token window."""
-
-    def eval(self, text: str, chunk_size: int):
-        if text is None:
-            return
-        toks = text.split()
-        for i in range(0, len(toks), chunk_size):
-            window = toks[i : i + chunk_size]
-            yield i // chunk_size, " ".join(window), len(window)
-
-
 def split_sentences(text: str | None) -> list[list[str]]:
     """Sentences of ``text`` as token lists, dropping empty sentences.
 
@@ -82,6 +62,11 @@ def split_sentences(text: str | None) -> list[list[str]]:
     return out
 
 
+# useArrow: without it the lateral join runs as BatchEvalPythonUDTF —
+# row-at-a-time pickling, the one Python boundary in the repo that
+# wasn't Arrow-batched (caught by tests/test_plan_invariants.py; the
+# PLANS.md "only Arrow surfaces" claim was wrong for this node until
+# round 11)
 @udtf(
     returnType="chunk_idx int, chunk string, chunk_tokens bigint",
     useArrow=True,
@@ -99,7 +84,7 @@ class ChunkSentencesUDTF:
     the final sentence (no trailing overlap-only chunk).
 
     Definitional twin: the recursive-CTE oracle in
-    plans/analytics_ext17.py::CHUNK_DOCS_SENTENCES_SQL — byte-equal
+    plans/text.py::CHUNK_DOCS_SENTENCES_SQL — byte-equal
     output proven there and in tests/test_ext17.py.
     """
 
@@ -128,5 +113,4 @@ class ChunkSentencesUDTF:
 
 
 def register(spark) -> None:
-    spark.udtf.register("chunk_tokens", ChunkTokensUDTF)
     spark.udtf.register("chunk_sentences", ChunkSentencesUDTF)

@@ -832,7 +832,7 @@ def prefix_filtered_containment(
     """Exact containment join C = |A∩B| / min(|A|,|B|) ≥ τ with the
     prefix-filter candidate reduction — the scale path behind the
     naive shared-shingle containment join
-    (plans/analytics_ext5.py::containment_dedup_pairs; output
+    (plans/dedup.py::containment_dedup_pairs; output
     identical: (id_a, id_b, containment, a_is_smaller) with
     id_a < id_b).
 

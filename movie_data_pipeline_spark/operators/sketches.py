@@ -18,7 +18,7 @@ hash values of a set are a uniform sample of its hash space, so
 with relative standard error ~ 1/sqrt(k-2) for the distinct/union
 estimates. Everything here is deterministic (xxhash64, no RNG), so
 the estimates are reproducible run-to-run and the verification gate
-(`plans/analytics_ext16.py::kmv_overlap_check`) pins the observed
+(`plans/sketches.py::kmv_overlap_check`) pins the observed
 error against the theoretical bound at every test SF.
 
 Scale posture (100 TB):

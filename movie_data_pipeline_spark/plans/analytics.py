@@ -1,5 +1,7 @@
-"""Driver-contract query inventory (SURVEY §2 operator families over
-the TESTDATA.md corpus), each as a (builder, oracle_sql) pair.
+"""Driver-contract query registry (SURVEY §2 operator families over
+the TESTDATA.md corpus): one ordered table of (builder, oracle_sql)
+pairs. The builders and their SQL twins live in the domain modules
+beside this one; this module only orders them.
 
 Every query is exposed twice — a DataFrame plan and ANSI SQL DuckDB
 can run on the same parquet — and cross-checked by the driver
@@ -15,7 +17,7 @@ Determinism rules used throughout (so hashes never flap):
 - No raw timestamps in outputs — epoch seconds (BIGINT) instead.
 - Every computed column is aliased identically in both plans.
 
-Presentation-sort convention (round 13, VERDICT item 7): the driver
+Presentation-sort convention: the driver
 and oracle hashes are ORDER-INSENSITIVE, so a trailing sort is never
 load-bearing — it exists only so humans can eyeball/diff output.
 - BOUNDED outputs (group summaries, top-k, O(groups)/O(dims) rows)
@@ -29,923 +31,29 @@ load-bearing — it exists only so humans can eyeball/diff output.
   presentation, and is exempt. The DuckDB SQL twins may keep ORDER BY
   for readability — the oracle compare ignores it.
 
-The registry at the bottom (QUERIES) is what __spark_entry__ serves.
+``QUERIES`` is what __spark_entry__ serves, in this order: the 50
+driver slots first (``_DRIVER_SLOTS``), then every other entry in the
+order it was added, so bench keys and artifact diffs stay stable.
 """
 
 from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from ..functions import text as TX
-from ..operators.similarity import brute_force_knn
-from ..sources.catalog import load_table
-from .columns import dec_sum
-
-
-def load_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Load events with epoch columns, adapting to whatever physical
-    type ``ts`` carries — the driver testdata has shipped it as both
-    parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS):
-
-    - TIMESTAMP(NANOS): Spark 4 rejects it by default; the session
-      reads it as raw nanos (LongType, ``nanosAsLong`` set in
-      ``session.get_spark``) and this derives µs/sec with integer DIV
-      (ns epochs exceed 2^53 — double math would corrupt them).
-    - TIMESTAMP(MICROS) as TIMESTAMP_NTZ: ``timestampdiff`` from the
-      NTZ epoch is timezone-independent wall-clock-as-UTC micros —
-      exactly DuckDB's ``epoch_us(ts)``.
-    - TIMESTAMP (session-tz): ``unix_micros`` directly.
-
-    All downstream event queries consume ``ts_us``/``ts_sec`` only,
-    never raw ``ts``, so the physical type is contained here."""
-    df = load_table(spark, sf, "events")
-    ts_type = dict(df.dtypes)["ts"]
-    if ts_type == "bigint":
-        return df.withColumn("ts_us", F.expr("ts DIV 1000")).withColumn(
-            "ts_sec", F.expr("ts DIV 1000000000")
-        )
-    if ts_type == "timestamp_ntz":
-        us = F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
-    else:
-        us = F.expr("unix_micros(ts)")
-    return df.withColumn("ts_us", us).withColumn(
-        "ts_sec", F.expr("ts_us DIV 1000000")
-    )
-
-
-def _avg2(col: F.Column) -> F.Column:
-    """ROUND(exact-sum / count, 2) — deterministic avg."""
-    return F.round(dec_sum(col, 4).cast("double") / F.count(col), 2)
-
-
-# ---------------------------------------------------------------------------
-# Q1 analog — top-1 by grouped average (join → agg → total-order top-k)
-# Reference shape: queries.sql:5-14 (J1, A1/A2/A6, O1/O4).
-# ---------------------------------------------------------------------------
-
-def q1_top_part(spark: SparkSession, sf: str) -> DataFrame:
-    li = load_table(spark, sf, "lineitem")
-    part = load_table(spark, sf, "part")
-    return (
-        li.join(part, li.l_partkey == part.p_partkey)
-        .groupBy("p_partkey", "p_name")
-        .agg(
-            _avg2(F.col("l_extendedprice")).alias("avg_price"),
-            F.count("l_extendedprice").alias("price_count"),
-        )
-        .orderBy(F.desc("avg_price"), F.desc("price_count"), F.asc("p_partkey"))
-        .limit(1)
-        .select("p_name", "avg_price", "price_count")
-    )
-
-
-Q1_TOP_PART_SQL = """
-SELECT p.p_name,
-       ROUND(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(30,4))) AS DOUBLE)
-             / COUNT(l.l_extendedprice), 2) AS avg_price,
-       COUNT(l.l_extendedprice) AS price_count
-FROM part p JOIN lineitem l ON p.p_partkey = l.l_partkey
-GROUP BY p.p_partkey, p.p_name
-ORDER BY avg_price DESC, price_count DESC, p.p_partkey ASC
-LIMIT 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q2 analog — 4-way join chain + countDistinct + top-5
-# Reference shape: queries.sql:19-30 (J2, A1/A4/A8, O1/O4).
-# ---------------------------------------------------------------------------
-
-def q2_top_regions(spark: SparkSession, sf: str) -> DataFrame:
-    region = load_table(spark, sf, "region")
-    nation = load_table(spark, sf, "nation")
-    customer = load_table(spark, sf, "customer")
-    orders = load_table(spark, sf, "orders")
-    return (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_regionkey", "r_name")
-        .agg(
-            _avg2(F.col("o_totalprice")).alias("avg_order_price"),
-            F.countDistinct("c_custkey").alias("customer_count"),
-            F.count(F.lit(1)).alias("order_count"),
-        )
-        .orderBy(F.desc("avg_order_price"), F.desc("order_count"), F.asc("r_regionkey"))
-        .limit(5)
-        .select("r_name", "avg_order_price", "customer_count", "order_count")
-    )
-
-
-Q2_TOP_REGIONS_SQL = """
-SELECT r.r_name,
-       ROUND(CAST(SUM(CAST(o.o_totalprice AS DECIMAL(30,4))) AS DOUBLE)
-             / COUNT(o.o_totalprice), 2) AS avg_order_price,
-       COUNT(DISTINCT c.c_custkey) AS customer_count,
-       COUNT(*) AS order_count
-FROM region r
-JOIN nation n   ON r.r_regionkey = n.n_regionkey
-JOIN customer c ON n.n_nationkey = c.c_nationkey
-JOIN orders o   ON c.c_custkey = o.o_custkey
-GROUP BY r.r_regionkey, r.r_name
-ORDER BY avg_order_price DESC, order_count DESC, r.r_regionkey ASC
-LIMIT 5
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q3 analog — filter + group + sorted string-agg + top-1
-# Reference shape: queries.sql:35-44 (P4, A3/A5, O2/O4).
-# ---------------------------------------------------------------------------
-
-def q3_top_segment(spark: SparkSession, sf: str) -> DataFrame:
-    customer = load_table(spark, sf, "customer")
-    return (
-        customer.filter(
-            F.col("c_mktsegment").isNotNull() & (F.col("c_mktsegment") != "N/A")
-        )
-        .groupBy("c_mktsegment")
-        .agg(
-            F.count(F.lit(1)).alias("customer_count"),
-            F.array_join(F.sort_array(F.collect_set("c_name")), ", ").alias(
-                "customers"
-            ),
-        )
-        .orderBy(F.desc("customer_count"), F.asc("c_mktsegment"))
-        .limit(1)
-    )
-
-
-Q3_TOP_SEGMENT_SQL = """
-SELECT c_mktsegment,
-       COUNT(*) AS customer_count,
-       STRING_AGG(DISTINCT c_name, ', ' ORDER BY c_name) AS customers
-FROM customer
-WHERE c_mktsegment IS NOT NULL AND c_mktsegment != 'N/A'
-GROUP BY c_mktsegment
-ORDER BY customer_count DESC, c_mktsegment ASC
-LIMIT 1
-"""
-
-
-# ---------------------------------------------------------------------------
-# Q4 analog — join-free time grouping, full ordered output
-# Reference shape: queries.sql:49-58 (P5, A1/A4/A8, O3).
-# ---------------------------------------------------------------------------
-
-def q4_yearly_shipments(spark: SparkSession, sf: str) -> DataFrame:
-    li = load_table(spark, sf, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate").isNotNull())
-        .groupBy(F.year("l_shipdate").cast("int").alias("ship_year"))
-        .agg(
-            _avg2(F.col("l_extendedprice")).alias("avg_price"),
-            F.countDistinct("l_orderkey").alias("order_count"),
-            F.count(F.lit(1)).alias("line_count"),
-        )
-        .orderBy(F.desc("ship_year"))
-    )
-
-
-Q4_YEARLY_SQL = """
-SELECT CAST(year(l_shipdate) AS INT) AS ship_year,
-       ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,4))) AS DOUBLE)
-             / COUNT(l_extendedprice), 2) AS avg_price,
-       COUNT(DISTINCT l_orderkey) AS order_count,
-       COUNT(*) AS line_count
-FROM lineitem
-WHERE l_shipdate IS NOT NULL
-GROUP BY ship_year
-ORDER BY ship_year DESC
-"""
-
-
-# ---------------------------------------------------------------------------
-# TPC-H Q1-style pricing summary — the aggregation workhorse
-# ---------------------------------------------------------------------------
-
-def pricing_summary(spark: SparkSession, sf: str) -> DataFrame:
-    li = load_table(spark, sf, "lineitem")
-    disc_price = F.col("l_extendedprice").cast("decimal(30,4)") * (
-        F.lit(1).cast("decimal(30,4)") - F.col("l_discount").cast("decimal(30,4)")
-    )
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            dec_sum(F.col("l_quantity"), 4).cast("double").alias("sum_qty"),
-            dec_sum(F.col("l_extendedprice"), 4).cast("double").alias("sum_base_price"),
-            F.round(F.sum(disc_price).cast("double"), 2).alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-PRICING_SUMMARY_SQL = """
-SELECT l_returnflag, l_linestatus,
-       CAST(SUM(CAST(l_quantity AS DECIMAL(30,4))) AS DOUBLE) AS sum_qty,
-       CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,4))) AS DOUBLE) AS sum_base_price,
-       ROUND(CAST(SUM(CAST(l_extendedprice AS DECIMAL(30,4))
-                 * (CAST(1 AS DECIMAL(30,4)) - CAST(l_discount AS DECIMAL(30,4))))
-             AS DOUBLE), 2) AS sum_disc_price,
-       COUNT(*) AS count_order
-FROM lineitem
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-"""
-
-
-# ---------------------------------------------------------------------------
-# Explode / unnest (E1 analog): token frequencies over documents
-# ---------------------------------------------------------------------------
-
-def explode_tokens(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    return (
-        docs.select(F.explode(TX.bpe_ish_tokens(F.col("text"))).alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("token_count"))
-        .orderBy(F.desc("token_count"), F.asc("token"))
-        .limit(20)
-    )
-
-
-EXPLODE_TOKENS_SQL = r"""
-SELECT token, COUNT(*) AS token_count
-FROM (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^\w'']+'),
-                            x -> x != '')) AS token
-  FROM documents
+from . import (
+    curation,
+    dedup,
+    events,
+    graphs,
+    retrieval,
+    sketches,
+    stats,
+    text,
+    tpch,
+    verification,
 )
-GROUP BY token
-ORDER BY token_count DESC, token ASC
-LIMIT 20
-"""
-
-
-# ---------------------------------------------------------------------------
-# Dedup family (exact) + fingerprinting
-# ---------------------------------------------------------------------------
-
-def dedup_exact_docs(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    return (
-        docs.withColumn("content_md5", TX.content_hash(F.col("text")))
-        .groupBy("content_md5")
-        .agg(F.count(F.lit(1)).alias("dup_count"), F.min("doc_id").alias("min_doc_id"))
-        .filter(F.col("dup_count") > 1)
-    )
-
-
-DEDUP_EXACT_SQL = """
-SELECT md5(text) AS content_md5, COUNT(*) AS dup_count, MIN(doc_id) AS min_doc_id
-FROM documents
-GROUP BY md5(text)
-HAVING COUNT(*) > 1
-"""
-
-
-def fingerprint_distinct(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    return docs.agg(
-        F.countDistinct(TX.fingerprint(F.col("text"))).alias("n_fingerprints"),
-        F.count(F.lit(1)).alias("n_docs"),
-    )
-
-
-# Oracle counts distinct normalized text — equal unless xxhash64 collides
-# (2^-64-scale probability at this cardinality).
-FINGERPRINT_SQL = r"""
-SELECT COUNT(DISTINCT trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS n_fingerprints,
-       COUNT(*) AS n_docs
-FROM documents
-"""
-
-
-# ---------------------------------------------------------------------------
-# Join shapes: anti / semi
-# ---------------------------------------------------------------------------
-
-def customers_without_orders(spark: SparkSession, sf: str) -> DataFrame:
-    customer = load_table(spark, sf, "customer")
-    orders = load_table(spark, sf, "orders")
-    return customer.join(
-        orders, customer.c_custkey == orders.o_custkey, "left_anti"
-    ).select("c_custkey", "c_name")
-
-
-CUSTOMERS_WITHOUT_ORDERS_SQL = """
-SELECT c_custkey, c_name
-FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-"""
-
-
-def parts_with_shipments(spark: SparkSession, sf: str) -> DataFrame:
-    part = load_table(spark, sf, "part")
-    li = load_table(spark, sf, "lineitem")
-    return part.join(li, part.p_partkey == li.l_partkey, "left_semi").select(
-        "p_partkey", "p_name"
-    )
-
-
-PARTS_WITH_SHIPMENTS_SQL = """
-SELECT p_partkey, p_name
-FROM part p
-WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_partkey = p.p_partkey)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Windows: last-write-wins dedup (D3) and top-k per group
-# ---------------------------------------------------------------------------
-
-def last_event_per_user(spark: SparkSession, sf: str) -> DataFrame:
-    events = load_events(spark, sf)
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts_us"), F.desc("event_id"))
-    return (
-        events.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "event_type", "value")
-    )
-
-
-LAST_EVENT_SQL = """
-SELECT user_id, event_id, event_type, value
-FROM (
-  SELECT user_id, event_id, event_type, value,
-         ROW_NUMBER() OVER (PARTITION BY user_id
-                            ORDER BY ts DESC, event_id DESC) AS rn
-  FROM events
-)
-WHERE rn = 1
-"""
-
-
-def top_orders_per_nation(spark: SparkSession, sf: str) -> DataFrame:
-    nation = load_table(spark, sf, "nation")
-    customer = load_table(spark, sf, "customer")
-    orders = load_table(spark, sf, "orders")
-    joined = orders.join(
-        customer, orders.o_custkey == customer.c_custkey
-    ).join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-    w = Window.partitionBy("n_name").orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        joined.withColumn("rnk", F.rank().over(w).cast("int"))
-        .filter(F.col("rnk") <= 3)
-        .select("n_name", "o_orderkey", "o_totalprice", "rnk")
-    )
-
-
-TOP_ORDERS_PER_NATION_SQL = """
-SELECT n_name, o_orderkey, o_totalprice, CAST(rnk AS INT) AS rnk
-FROM (
-  SELECT n.n_name, o.o_orderkey, o.o_totalprice,
-         RANK() OVER (PARTITION BY n.n_name
-                      ORDER BY o.o_totalprice DESC, o.o_orderkey ASC) AS rnk
-  FROM nation n
-  JOIN customer c ON n.n_nationkey = c.c_nationkey
-  JOIN orders o   ON c.c_custkey = o.o_custkey
-)
-WHERE rnk <= 3
-"""
-
-
-# ---------------------------------------------------------------------------
-# Grouping sets: rollup
-# ---------------------------------------------------------------------------
-
-def rollup_orders(spark: SparkSession, sf: str) -> DataFrame:
-    region = load_table(spark, sf, "region")
-    nation = load_table(spark, sf, "nation")
-    customer = load_table(spark, sf, "customer")
-    orders = load_table(spark, sf, "orders")
-    joined = (
-        orders.join(customer, orders.o_custkey == customer.c_custkey)
-        .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-    )
-    return joined.rollup("r_name", "n_name").agg(
-        F.count(F.lit(1)).alias("order_count"),
-        F.round(dec_sum(F.col("o_totalprice"), 4).cast("double"), 2).alias("total_price"),
-    )
-
-
-ROLLUP_ORDERS_SQL = """
-SELECT r_name, n_name, COUNT(*) AS order_count,
-       ROUND(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,4))) AS DOUBLE), 2) AS total_price
-FROM region r
-JOIN nation n   ON r.r_regionkey = n.n_regionkey
-JOIN customer c ON n.n_nationkey = c.c_nationkey
-JOIN orders o   ON c.c_custkey = o.o_custkey
-GROUP BY ROLLUP (r_name, n_name)
-"""
-
-
-# ---------------------------------------------------------------------------
-# Text analysis: token stats, quality, language ID
-# ---------------------------------------------------------------------------
-
-def doc_token_stats(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    enriched = docs.select(
-        "lang",
-        TX.token_count(F.col("text")).alias("n_tokens"),
-        F.length("text").alias("n_text_chars"),
-    )
-    return (
-        enriched.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("doc_count"),
-            F.round(
-                dec_sum(F.col("n_tokens").cast("double"), 4).cast("double")
-                / F.count(F.lit(1)),
-                4,
-            ).alias("avg_tokens"),
-            F.round(
-                dec_sum(F.col("n_text_chars").cast("double"), 4).cast("double")
-                / F.count(F.lit(1)),
-                4,
-            ).alias("avg_chars"),
-        )
-    )
-
-
-DOC_TOKEN_STATS_SQL = r"""
-SELECT lang,
-       COUNT(*) AS doc_count,
-       ROUND(CAST(SUM(CAST(n_tokens AS DECIMAL(30,4))) AS DOUBLE) / COUNT(*), 4) AS avg_tokens,
-       ROUND(CAST(SUM(CAST(n_text_chars AS DECIMAL(30,4))) AS DOUBLE) / COUNT(*), 4) AS avg_chars
-FROM (
-  SELECT lang,
-         len(list_filter(string_split_regex(trim(text), '\s+'), x -> x != '')) AS n_tokens,
-         length(text) AS n_text_chars
-  FROM documents
-)
-GROUP BY lang
-"""
-
-
-def doc_quality(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    # materialize both tokenizations once (multi-referenced by the score)
-    return (
-        docs.withColumn("_ws", TX.tokens(F.col("text")))
-        .withColumn("_bpe", TX.bpe_ish_tokens(F.col("text")))
-        .select(
-            "doc_id",
-            TX.quality_score_from(
-                F.col("_ws"), F.col("_bpe"), F.col("text")
-            ).alias("quality"),
-        )
-    )
-
-
-DOC_QUALITY_SQL = r"""
-WITH t AS (
-  SELECT doc_id, text,
-         len(list_filter(string_split_regex(trim(text), '\s+'), x -> x != '')) AS n_tokens,
-         list_filter(string_split_regex(lower(text), '[^\w'']+'), x -> x != '') AS toks,
-         CASE WHEN length(text) > 0
-              THEN length(regexp_replace(text, '[\w\s]', '', 'g')) / length(text)
-              ELSE 0.0 END AS punct_ratio
-  FROM documents
-),
-s AS (
-  SELECT doc_id, n_tokens, punct_ratio,
-         CASE WHEN len(toks) > 0
-              THEN len(list_filter(toks, x -> x IN
-                   ('the','and','of','to','in','is','that','it','for','with')))
-                   / len(toks)
-              ELSE 0.0 END AS stop_ratio
-  FROM t
-)
-SELECT doc_id,
-       ROUND((least(n_tokens / 100.0, 1.0)
-            + (1.0 - least(punct_ratio * 5.0, 1.0))
-            + (1.0 - least(abs(stop_ratio - 0.4) * 2.0, 1.0))) / 3.0, 6) AS quality
-FROM s
-"""
-
-
-def lang_id_docs(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    # tokenize ONCE into a real column — the detection cascade reads it
-    # 8×, and HOFs get no codegen CSE (see detected_lang_from docstring)
-    return docs.withColumn("_toks", TX.bpe_ish_tokens(F.col("text"))).select(
-        "doc_id",
-        "lang",
-        TX.detected_lang_from(F.col("_toks")).alias("detected_lang"),
-    )
-
-
-_SW = {k: ", ".join(f"'{w}'" for w in v) for k, v in TX.STOPWORDS.items()}
-LANG_ID_SQL = rf"""
-WITH t AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '[^\w'']+'), x -> x != '') AS toks
-  FROM documents
-),
-h AS (
-  SELECT doc_id, lang,
-         len(list_filter(toks, x -> x IN ({_SW['en']}))) AS hits_en,
-         len(list_filter(toks, x -> x IN ({_SW['de']}))) AS hits_de,
-         len(list_filter(toks, x -> x IN ({_SW['fr']}))) AS hits_fr,
-         len(list_filter(toks, x -> x IN ({_SW['es']}))) AS hits_es
-  FROM t
-)
-SELECT doc_id, lang,
-       CASE WHEN greatest(hits_en, hits_de, hits_fr, hits_es) = 0 THEN 'und'
-            WHEN hits_en >= hits_de AND hits_en >= hits_fr AND hits_en >= hits_es THEN 'en'
-            WHEN hits_de >= hits_fr AND hits_de >= hits_es THEN 'de'
-            WHEN hits_fr >= hits_es THEN 'fr'
-            ELSE 'es' END AS detected_lang
-FROM h
-"""
-
-
-# ---------------------------------------------------------------------------
-# Dedup family (near-dup): exact n-gram Jaccard — the oracle-able one.
-# Candidate generation by shingle self-join is EXHAUSTIVE (a pair with
-# jaccard > 0 shares ≥1 shingle), so unlike the LSH families this
-# matches a brute-force oracle exactly. The LSH variants (registered
-# rows-only below) are the probabilistic scale path.
-# ---------------------------------------------------------------------------
-
-def ngram_jaccard_exact(
-    spark: SparkSession, sf: str, threshold: float = 0.5
-) -> DataFrame:
-    """Exact all-pairs Jaccard ≥ τ via a count-based shingle self-join.
-
-    Plan shape (one shingle computation, two shuffles):
-    1. shingle once, explode to (doc_id, n_sh, shingle), persist —
-       the self-join reads the cached 1-pass result on both sides;
-    2. self-join on shingle + length filter (J ≥ τ ⇒ τ·|A| ≤ |B| ≤
-       |A|/τ) + id_a < id_b;
-    3. groupBy pair: COUNT(*) IS the intersection size (shingles are
-       distinct per doc), so jaccard = inter / (na + nb − inter) with
-       no second join and no array intersection work.
-
-    Scale note: candidate volume is Σ_s C(df(s), 2). This corpus's
-    hottest shingle hits only ~25 docs, so the exhaustive join is
-    cheap and exactly matches the brute-force oracle. At web scale a
-    PPJoin-style rarity-ordered prefix filter bounds step 2 (only the
-    ⌊(1−τ)·|S|⌋+1 globally-rarest shingles of each doc enter the
-    join), and the LSH families (minhash_dedup_pairs) are the
-    sub-quadratic path.
-    """
-    from ..operators.dedup import with_hashed_shingles
-
-    docs = load_table(spark, sf, "documents")
-    # repartition: single-file sources otherwise shingle on one core.
-    # Cache BEFORE the explode: 5k array rows compress into the
-    # columnar cache ~2× faster than 260k exploded rows, and
-    # re-exploding from cache is a cheap narrow op per join side.
-    # Grams are 8-byte xxhash64 folds, not strings (dedup.py::
-    # with_hashed_shingles) — set semantics identical modulo 2⁻⁶⁴
-    # collisions; the string-n-gram DuckDB oracle pins equivalence.
-    sh0 = (
-        with_hashed_shingles(
-            docs.repartition(spark.sparkContext.defaultParallelism),
-            "text", 3, out="sh_raw",
-        )
-        .select("doc_id", F.array_distinct("sh_raw").alias("sh"))
-        .withColumn("n_sh", F.size("sh"))
-        .persist()
-    )
-    e = sh0.select(
-        "doc_id", "n_sh", F.explode("sh").alias("shingle")
-    )
-
-    a = e.select(
-        F.col("doc_id").alias("id_a"), F.col("n_sh").alias("na"), "shingle"
-    )
-    b = e.select(
-        F.col("doc_id").alias("id_b"), F.col("n_sh").alias("nb"), "shingle"
-    )
-    pairs = (
-        a.join(b, "shingle")
-        .filter(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.col("nb") >= F.lit(threshold) * F.col("na"))
-            & (F.col("nb") <= F.col("na") / F.lit(threshold))
-        )
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.count(F.lit(1)).alias("inter"),
-            F.max("na").alias("na"),
-            F.max("nb").alias("nb"),
-        )
-    )
-    jac = F.col("inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("inter")
-    )
-    return pairs.filter(jac >= threshold).select(
-        "id_a", "id_b", F.round(jac, 6).alias("jaccard")
-    )
-
-
-NGRAM_JACCARD_SQL = r"""
-WITH sh AS (
-  SELECT doc_id,
-         list_distinct(
-           CASE WHEN len(toks) >= 3
-                THEN list_transform(range(1, len(toks) - 1),
-                                    i -> array_to_string(toks[i:i+2], ' '))
-                ELSE [array_to_string(toks, ' ')] END) AS shset
-  FROM (
-    SELECT doc_id,
-           list_filter(string_split_regex(lower(text), '[^\w'']+'),
-                       x -> x != '') AS toks
-    FROM documents
-  )
-),
-e AS (SELECT doc_id, len(shset) AS n_sh, unnest(shset) AS shingle FROM sh),
-p AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS inter,
-         any_value(a.n_sh) AS na, any_value(b.n_sh) AS nb
-  FROM e a JOIN e b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-)
-SELECT id_a, id_b,
-       ROUND(CAST(inter AS DOUBLE) / (na + nb - inter), 6) AS jaccard
-FROM p
-WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.5
-"""
-
-
-# ---------------------------------------------------------------------------
-# Rows-only queries (no SQL oracle — probabilistic/LSH operators; the
-# driver records a weaker rows-only check, and tests/test_operators.py
-# verifies their semantics on planted fixtures)
-# ---------------------------------------------------------------------------
-
-def minhash_dedup_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.dedup import minhash_lsh_duplicates
-
-    docs = load_table(spark, sf, "documents")
-    return minhash_lsh_duplicates(docs, threshold=0.7)
-
-
-def simhash_dedup_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.dedup import simhash_duplicates
-
-    docs = load_table(spark, sf, "documents")
-    return simhash_duplicates(docs, max_hamming=3)
-
-
-def lsh_knn_embeddings(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.similarity import lsh_knn
-
-    emb = load_table(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    return lsh_knn(emb, queries, dim=64, k=5, nbits=8, probe_hamming=2).select(
-        "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank")
-    )
-
-
-def embedding_neardup_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.similarity import embedding_near_duplicates
-
-    # τ = 0.45: this synthetic corpus's max pairwise cosine is ~0.5-0.6,
-    # so any higher threshold returns zero rows and verifies nothing
-    # (round-1 lesson). At τ this close to the background similarity
-    # (random pairs ~0.5 collision prob per bit) banding cannot prune
-    # much — information-theoretic, not a plan defect — so the demo
-    # runs on the same bounded vec_id<500 slice the recall check
-    # gates. At real near-dup thresholds (τ ≥ 0.9) the same operator
-    # prunes to ~1e-5 of the pair space with band_bits=16.
-    emb = load_table(spark, sf, "embeddings").filter(F.col("vec_id") < 500)
-    return embedding_near_duplicates(emb, dim=64, threshold=0.45)
-
-
-# ---------------------------------------------------------------------------
-# Similarity search: exact brute-force KNN (ids + rank only — float
-# scores stay out of the hash; ordering is verified via the rank)
-# ---------------------------------------------------------------------------
-
-def embedding_knn(spark: SparkSession, sf: str) -> DataFrame:
-    emb = load_table(spark, sf, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10)
-    knn = brute_force_knn(emb, queries, k=5)
-    return knn.select(
-        "query_id", "neighbor_id", F.col("rank").cast("int").alias("rank")
-    )
-
-
-EMBEDDING_KNN_SQL = """
--- embeddings funnel through FLOAT[] before DOUBLE[] to mirror the
--- engine's load_table normalization (Spark stores array<float>, then
--- computes cosine in double): if the driver corpus ever ships
--- array<double>, both engines must see the same float-rounded vectors
--- or borderline top-k ranks diverge.
-WITH q AS (SELECT vec_id AS query_id,
-                  CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS q_vec
-           FROM embeddings WHERE vec_id < 10),
-c AS (SELECT vec_id AS neighbor_id,
-             CAST(CAST(embedding AS FLOAT[]) AS DOUBLE[]) AS c_vec
-      FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-         list_cosine_similarity(q_vec, c_vec) AS cs
-  FROM q CROSS JOIN c
-  WHERE query_id != neighbor_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                                 ORDER BY cs DESC, neighbor_id ASC) AS INT) AS rank
-  FROM scored
-)
-SELECT query_id, neighbor_id, rank FROM ranked WHERE rank <= 5
-"""
-
-
-# ---------------------------------------------------------------------------
-# Streaming-shaped (batch-equivalent) queries over events
-# ---------------------------------------------------------------------------
-
-def events_hourly(spark: SparkSession, sf: str) -> DataFrame:
-    events = load_events(spark, sf)
-    return (
-        events.groupBy(
-            (F.expr("ts_us DIV 3600000000") * 3600).alias("hour_epoch"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("event_count"),
-            F.round(dec_sum(F.col("value"), 6).cast("double"), 2).alias("value_sum"),
-        )
-    )
-
-
-EVENTS_HOURLY_SQL = """
-SELECT CAST(floor(epoch(date_trunc('hour', ts))) AS BIGINT) AS hour_epoch,
-       event_type,
-       COUNT(*) AS event_count,
-       ROUND(CAST(SUM(CAST(value AS DECIMAL(30,6))) AS DOUBLE), 2) AS value_sum
-FROM events
-GROUP BY 1, 2
-"""
-
-
-def sessionize_events(spark: SparkSession, sf: str) -> DataFrame:
-    """Gaps-and-islands sessionization (30-min inactivity gap) — the
-    batch twin of streaming/events.py::sessionize (same session
-    boundaries a session_window stream would emit)."""
-    events = load_events(spark, sf)
-    e = events.select("user_id", "event_id", F.col("ts_sec").alias("tse"))
-    w = Window.partitionBy("user_id").orderBy("tse", "event_id")
-    flagged = e.withColumn(
-        "is_new",
-        F.when(
-            F.lag("tse").over(w).isNull()
-            | ((F.col("tse") - F.lag("tse").over(w)) > 1800),
-            F.lit(1),
-        ).otherwise(F.lit(0)),
-    )
-    sessions = flagged.withColumn(
-        "session_seq",
-        F.sum("is_new").over(w.rowsBetween(Window.unboundedPreceding, 0)),
-    )
-    return (
-        sessions.groupBy("user_id", "session_seq")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.min("tse").alias("session_start"),
-            F.max("tse").alias("session_end"),
-        )
-        .select(
-            "user_id",
-            F.col("session_seq").cast("int").alias("session_seq"),
-            "n_events",
-            "session_start",
-            "session_end",
-        )
-    )
-
-
-SESSIONIZE_SQL = """
-WITH e AS (
-  SELECT user_id, event_id, CAST(floor(epoch(ts)) AS BIGINT) AS tse FROM events
-),
-flagged AS (
-  SELECT user_id, event_id, tse,
-         CASE WHEN LAG(tse) OVER w IS NULL
-                OR tse - LAG(tse) OVER w > 1800
-              THEN 1 ELSE 0 END AS is_new
-  FROM e
-  WINDOW w AS (PARTITION BY user_id ORDER BY tse, event_id)
-),
-sessions AS (
-  SELECT user_id, tse,
-         SUM(is_new) OVER (PARTITION BY user_id ORDER BY tse, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_seq
-  FROM flagged
-)
-SELECT user_id, CAST(session_seq AS INT) AS session_seq,
-       COUNT(*) AS n_events,
-       MIN(tse) AS session_start,
-       MAX(tse) AS session_end
-FROM sessions
-GROUP BY user_id, session_seq
-"""
-
-
-# ---------------------------------------------------------------------------
-# Registry: name → (builder, oracle_sql | None)
-# ---------------------------------------------------------------------------
-
-QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
-    "q1_top_part": (q1_top_part, Q1_TOP_PART_SQL),
-    "q2_top_regions": (q2_top_regions, Q2_TOP_REGIONS_SQL),
-    "q3_top_segment": (q3_top_segment, Q3_TOP_SEGMENT_SQL),
-    "q4_yearly_shipments": (q4_yearly_shipments, Q4_YEARLY_SQL),
-    "pricing_summary": (pricing_summary, PRICING_SUMMARY_SQL),
-    "explode_tokens": (explode_tokens, EXPLODE_TOKENS_SQL),
-    "dedup_exact_docs": (dedup_exact_docs, DEDUP_EXACT_SQL),
-    "fingerprint_distinct": (fingerprint_distinct, FINGERPRINT_SQL),
-    "customers_without_orders": (customers_without_orders, CUSTOMERS_WITHOUT_ORDERS_SQL),
-    "parts_with_shipments": (parts_with_shipments, PARTS_WITH_SHIPMENTS_SQL),
-    "last_event_per_user": (last_event_per_user, LAST_EVENT_SQL),
-    "top_orders_per_nation": (top_orders_per_nation, TOP_ORDERS_PER_NATION_SQL),
-    "rollup_orders": (rollup_orders, ROLLUP_ORDERS_SQL),
-    "doc_token_stats": (doc_token_stats, DOC_TOKEN_STATS_SQL),
-    "doc_quality": (doc_quality, DOC_QUALITY_SQL),
-    "lang_id_docs": (lang_id_docs, LANG_ID_SQL),
-    "embedding_knn": (embedding_knn, EMBEDDING_KNN_SQL),
-    "events_hourly": (events_hourly, EVENTS_HOURLY_SQL),
-    "sessionize_events": (sessionize_events, SESSIONIZE_SQL),
-    "ngram_jaccard_exact": (ngram_jaccard_exact, NGRAM_JACCARD_SQL),
-    # rows-only (LSH / probabilistic — no exact SQL twin)
-    "minhash_dedup_pairs": (minhash_dedup_pairs, None),
-    "simhash_dedup_pairs": (simhash_dedup_pairs, None),
-    "lsh_knn_embeddings": (lsh_knn_embeddings, None),
-    "embedding_neardup_pairs": (embedding_neardup_pairs, None),
-}
-
-# Extended operator families (set ops, cube, analytic windows,
-# percentiles, as-of/non-equi joins, string family, sliding windows,
-# multimodal). Imported at the bottom to reuse this module's helpers.
-from .analytics_ext import EXT_QUERIES  # noqa: E402
-from .analytics_ext3 import EXT3_QUERIES  # noqa: E402
-from .analytics_ext4 import EXT4_QUERIES  # noqa: E402
-from .analytics_ext5 import EXT5_QUERIES  # noqa: E402
-from .curation import CURATION_QUERIES  # noqa: E402
-from .graphs import GRAPH_QUERIES  # noqa: E402
-from .stats import STATS_QUERIES  # noqa: E402
-from .timeseries import TIMESERIES_QUERIES  # noqa: E402
-from .analytics_ext6 import EXT6_QUERIES  # noqa: E402
-from .analytics_ext7 import EXT7_QUERIES  # noqa: E402
-from .analytics_ext8 import EXT8_QUERIES  # noqa: E402
-from .analytics_ext9 import EXT9_QUERIES  # noqa: E402
-from .analytics_ext10 import EXT10_QUERIES  # noqa: E402
-from .analytics_ext11 import EXT11_QUERIES  # noqa: E402
-from .analytics_ext12 import EXT12_QUERIES  # noqa: E402
-from .analytics_ext13 import EXT13_QUERIES  # noqa: E402
-from .analytics_ext14 import EXT14_QUERIES  # noqa: E402
-from .analytics_ext15 import EXT15_QUERIES  # noqa: E402
-from .analytics_ext16 import EXT16_QUERIES  # noqa: E402
-from .analytics_ext17 import EXT17_QUERIES  # noqa: E402
-from .analytics_ext18 import EXT18_QUERIES  # noqa: E402
-from .analytics_ext19 import EXT19_QUERIES  # noqa: E402
-from .analytics_ext20 import EXT20_QUERIES  # noqa: E402
-from .analytics_ext21 import EXT21_QUERIES  # noqa: E402
-from .analytics_ext22 import EXT22_QUERIES  # noqa: E402
-from .verification import VERIFY_QUERIES  # noqa: E402
-
-QUERIES.update(EXT_QUERIES)
-QUERIES.update(EXT3_QUERIES)
-QUERIES.update(EXT4_QUERIES)
-QUERIES.update(EXT5_QUERIES)
-QUERIES.update(CURATION_QUERIES)
-QUERIES.update(TIMESERIES_QUERIES)
-QUERIES.update(STATS_QUERIES)
-QUERIES.update(GRAPH_QUERIES)
-QUERIES.update(VERIFY_QUERIES)
-# round-8 batch appends AFTER the verification gates so the frozen
-# first-50 driver slots (and everything the r4-r7 CORRECTNESS rows
-# compare against) keep their byte-identical order.
-QUERIES.update(EXT6_QUERIES)
-QUERIES.update(EXT7_QUERIES)
-QUERIES.update(EXT8_QUERIES)
-QUERIES.update(EXT9_QUERIES)
-QUERIES.update(EXT10_QUERIES)
-QUERIES.update(EXT11_QUERIES)
-QUERIES.update(EXT12_QUERIES)
-QUERIES.update(EXT13_QUERIES)
-QUERIES.update(EXT14_QUERIES)
-QUERIES.update(EXT15_QUERIES)
-QUERIES.update(EXT16_QUERIES)
-QUERIES.update(EXT17_QUERIES)
-QUERIES.update(EXT18_QUERIES)
-QUERIES.update(EXT19_QUERIES)
-QUERIES.update(EXT20_QUERIES)
-QUERIES.update(EXT21_QUERIES)
-QUERIES.update(EXT22_QUERIES)
 
 # Driver-slot curation. The round driver's correctness gate records
 # only the first 50 registry entries (rounds 1-3 each produced exactly
@@ -955,7 +63,8 @@ QUERIES.update(EXT22_QUERIES)
 # including the combined approximate-family gate (approx_suite_check)
 # and the full-output connected-components oracle (cluster_check).
 # Demoted entries lose nothing locally: tools/oracle_check.py runs all
-# of them, and bench.py times all non-check queries.
+# of them, and bench.py times all non-check queries. The strict 50-slot
+# invariant is enforced by tests/test_analytics_oracle.
 _DRIVER_SLOTS = [
     # reference-workload analogs
     "q1_top_part", "q2_top_regions", "q3_top_segment",
@@ -985,10 +94,348 @@ _DRIVER_SLOTS = [
     # driver-enforced verification of the approximate families
     "approx_suite_check", "cluster_check",
 ]
-# Degrade, never crash, at import time: a renamed/removed slot query
-# must not take down the whole registry in the driver's process. The
-# strict 50-slot invariant is enforced by tests/test_analytics_oracle.
-_slots = [n for n in _DRIVER_SLOTS if n in QUERIES]
-QUERIES = {n: QUERIES[n] for n in _slots} | {
-    k: v for k, v in QUERIES.items() if k not in set(_slots)
+
+# Registry: name → (builder, oracle_sql | None). Entries with None are
+# rows-only (LSH / probabilistic — no exact SQL twin).
+QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]] = {
+    # the driver slots, in _DRIVER_SLOTS order
+    "q1_top_part": (tpch.q1_top_part, tpch.Q1_TOP_PART_SQL),
+    "q2_top_regions": (tpch.q2_top_regions, tpch.Q2_TOP_REGIONS_SQL),
+    "q3_top_segment": (tpch.q3_top_segment, tpch.Q3_TOP_SEGMENT_SQL),
+    "q4_yearly_shipments": (tpch.q4_yearly_shipments, tpch.Q4_YEARLY_SQL),
+    "pricing_summary": (tpch.pricing_summary, tpch.PRICING_SUMMARY_SQL),
+    "shipping_priority": (tpch.shipping_priority, tpch.SHIPPING_PRIORITY_SQL),
+    "supplier_volume_by_nation": (
+        tpch.supplier_volume_by_nation, tpch.SUPPLIER_VOLUME_SQL
+    ),
+    "rollup_orders": (tpch.rollup_orders, tpch.ROLLUP_ORDERS_SQL),
+    "grouping_sets_revenue": (tpch.grouping_sets_revenue, tpch.GROUPING_SETS_SQL),
+    "cube_lineitem": (tpch.cube_lineitem, tpch.CUBE_LINEITEM_SQL),
+    "pivot_priority_by_year": (tpch.pivot_priority_by_year, tpch.PIVOT_PRIORITY_SQL),
+    "unpivot_part_metrics": (tpch.unpivot_part_metrics, tpch.UNPIVOT_PART_SQL),
+    "set_ops_summary": (tpch.set_ops_summary, tpch.SET_OPS_SQL),
+    "customers_without_orders": (
+        tpch.customers_without_orders, tpch.CUSTOMERS_WITHOUT_ORDERS_SQL
+    ),
+    "parts_with_shipments": (tpch.parts_with_shipments, tpch.PARTS_WITH_SHIPMENTS_SQL),
+    "price_band_summary": (tpch.price_band_summary, tpch.PRICE_BAND_SQL),
+    "orders_above_customer_avg": (
+        tpch.orders_above_customer_avg, tpch.ORDERS_ABOVE_AVG_SQL
+    ),
+    "fk_integrity_audit": (tpch.fk_integrity_audit, tpch.FK_AUDIT_SQL),
+    "price_quantiles_by_segment": (
+        stats.price_quantiles_by_segment, stats.PRICE_QUANTILES_SQL
+    ),
+    "approx_distinct_summary": (
+        sketches.approx_distinct_summary, sketches.APPROX_DISTINCT_SQL
+    ),
+    "customer_balance_tiles": (tpch.customer_balance_tiles, tpch.CUSTOMER_TILES_SQL),
+    "explode_tokens": (text.explode_tokens, text.EXPLODE_TOKENS_SQL),
+    "last_event_per_user": (events.last_event_per_user, events.LAST_EVENT_SQL),
+    "top_orders_per_nation": (
+        tpch.top_orders_per_nation, tpch.TOP_ORDERS_PER_NATION_SQL
+    ),
+    "event_deltas": (events.event_deltas, events.EVENT_DELTAS_SQL),
+    "sessionize_events": (events.sessionize_events, events.SESSIONIZE_SQL),
+    "events_hourly": (events.events_hourly, events.EVENTS_HOURLY_SQL),
+    "conversion_funnel": (events.conversion_funnel, events.CONVERSION_FUNNEL_SQL),
+    "cohort_retention": (events.cohort_retention, events.COHORT_RETENTION_SQL),
+    "scd2_user_state": (events.scd2_user_state, events.SCD2_USER_STATE_SQL),
+    "json_props_stats": (events.json_props_stats, events.JSON_PROPS_SQL),
+    "doc_token_stats": (text.doc_token_stats, text.DOC_TOKEN_STATS_SQL),
+    "doc_quality": (text.doc_quality, text.DOC_QUALITY_SQL),
+    "lang_id_docs": (text.lang_id_docs, text.LANG_ID_SQL),
+    "fingerprint_distinct": (dedup.fingerprint_distinct, dedup.FINGERPRINT_SQL),
+    "dedup_exact_docs": (dedup.dedup_exact_docs, dedup.DEDUP_EXACT_SQL),
+    "ngram_jaccard_exact": (dedup.ngram_jaccard_exact, dedup.NGRAM_JACCARD_SQL),
+    "tfidf_top_terms": (retrieval.tfidf_top_terms, retrieval.TFIDF_SQL),
+    "bm25_top_docs": (retrieval.bm25_top_docs_q, retrieval.BM25_SQL),
+    "chunk_docs": (text.chunk_docs, text.CHUNK_DOCS_SQL),
+    "decontaminate_docs": (curation.decontaminate_docs, curation.DECONTAMINATE_SQL),
+    "doc_repetition_stats": (
+        curation.doc_repetition_stats, curation.DOC_REPETITION_SQL
+    ),
+    "doc_split_assignment": (curation.doc_split_assignment, curation.DOC_SPLIT_SQL),
+    "embedding_knn": (retrieval.embedding_knn, retrieval.EMBEDDING_KNN_SQL),
+    "embedding_dim_means": (
+        retrieval.embedding_dim_means, retrieval.EMBEDDING_DIM_MEANS_SQL
+    ),
+    "multimodal_meta": (retrieval.multimodal_meta, retrieval.MULTIMODAL_META_SQL),
+    "part_name_features": (tpch.part_name_features, tpch.PART_NAME_FEATURES_SQL),
+    "salted_quantity_stats": (tpch.salted_quantity_stats, tpch.SALTED_QUANTITY_SQL),
+    "approx_suite_check": (
+        verification.approx_suite_check, verification.APPROX_SUITE_SQL
+    ),
+    "cluster_check": (verification.cluster_check, verification.CLUSTER_CHECK_SQL),
+    # the rest, in the order the entries were added
+    "minhash_dedup_pairs": (dedup.minhash_dedup_pairs, None),
+    "simhash_dedup_pairs": (dedup.simhash_dedup_pairs, None),
+    "lsh_knn_embeddings": (retrieval.lsh_knn_embeddings, None),
+    "embedding_neardup_pairs": (retrieval.embedding_neardup_pairs, None),
+    "user_moving_avg": (events.user_moving_avg, events.USER_MOVING_AVG_SQL),
+    "purchase_attribution": (
+        events.purchase_attribution, events.PURCHASE_ATTRIBUTION_SQL
+    ),
+    "events_sliding_windows": (
+        events.events_sliding_windows, events.EVENTS_SLIDING_SQL
+    ),
+    "order_date_features": (tpch.order_date_features, tpch.ORDER_DATE_FEATURES_SQL),
+    "frame_samples": (retrieval.frame_samples, retrieval.FRAME_SAMPLES_SQL),
+    "frame_dhash_dupes": (retrieval.frame_dhash_dupes, retrieval.FRAME_DHASH_DUPES_SQL),
+    "audio_windows": (retrieval.audio_windows, retrieval.AUDIO_WINDOWS_SQL),
+    "ivf_knn_embeddings": (retrieval.ivf_knn_embeddings, None),
+    "pq_knn_embeddings": (retrieval.pq_knn_embeddings, None),
+    "ivfpq_knn_embeddings": (retrieval.ivfpq_knn_embeddings, None),
+    "winnow_pairs": (dedup.winnow_pairs, None),
+    "doc_packing": (text.doc_packing, None),
+    "dedup_clusters": (dedup.dedup_clusters, None),
+    "profile_customer": (tpch.profile_customer, tpch.PROFILE_CUSTOMER_SQL),
+    "orders_expectations": (tpch.orders_expectations, tpch.ORDERS_EXPECTATIONS_SQL),
+    "approx_quantiles_lineitem": (sketches.approx_quantiles_lineitem, None),
+    "corpus_rebalance": (curation.corpus_rebalance, curation.CORPUS_REBALANCE_SQL),
+    "sole_return_suppliers": (tpch.sole_return_suppliers, tpch.SOLE_RETURN_SQL),
+    "q22_waiting_wealth": (tpch.q22_waiting_wealth, tpch.Q22_WAITING_WEALTH_SQL),
+    "q2_min_cost_supplier": (tpch.q2_min_cost_supplier, tpch.Q2_MIN_COST_SQL),
+    "q11_important_parts": (tpch.q11_important_parts, tpch.Q11_IMPORTANT_PARTS_SQL),
+    "q15_top_supplier": (tpch.q15_top_supplier, tpch.Q15_TOP_SUPPLIER_SQL),
+    "q17_small_qty_revenue": (tpch.q17_small_qty_revenue, tpch.Q17_SMALL_QTY_SQL),
+    "q18_large_volume_customers": (
+        tpch.q18_large_volume_customers, tpch.Q18_LARGE_VOLUME_SQL
+    ),
+    "q20_excess_shippers": (tpch.q20_excess_shippers, tpch.Q20_EXCESS_SHIPPERS_SQL),
+    "segment_balance_extremes": (
+        tpch.segment_balance_extremes, tpch.SEGMENT_BALANCE_EXTREMES_SQL
+    ),
+    "brand_basket_lift": (tpch.brand_basket_lift, tpch.BRAND_BASKET_SQL),
+    "part_name_linkage": (dedup.part_name_linkage, dedup.PART_NAME_LINKAGE_SQL),
+    "urgent_revenue_pruned": (
+        tpch.urgent_revenue_pruned, tpch.URGENT_REVENUE_PRUNED_SQL
+    ),
+    "ppjoin_jaccard_pairs": (dedup.ppjoin_jaccard_pairs, dedup.PPJOIN_JACCARD_SQL),
+    "orders_version_diff": (tpch.orders_version_diff, tpch.ORDERS_VERSION_DIFF_SQL),
+    "nation_revenue_share_shift": (
+        tpch.nation_revenue_share_shift, tpch.NATION_SHARE_SHIFT_SQL
+    ),
+    "rolling_7d_distinct_users": (
+        events.rolling_7d_distinct_users, events.ROLLING_7D_SQL
+    ),
+    "null_semantics_probe": (tpch.null_semantics_probe, tpch.NULL_SEMANTICS_SQL),
+    "q7_nation_trade_volume": (tpch.q7_nation_trade_volume, tpch.Q7_SQL),
+    "value_drift_psi": (stats.value_drift_psi, stats.VALUE_DRIFT_PSI_SQL),
+    "token_top_by_lang": (text.token_top_by_lang, text.TOKEN_TOP_BY_LANG_SQL),
+    "q4_late_orders": (tpch.q4_late_orders, tpch.Q4_PRIORITY_SQL),
+    "q10_returned_items": (tpch.q10_returned_items, tpch.Q10_SQL),
+    "q8_market_share": (tpch.q8_market_share, tpch.Q8_SQL),
+    "q13_custdist": (tpch.q13_custdist, tpch.Q13_SQL),
+    "q14_promo_revenue": (tpch.q14_promo_revenue, tpch.Q14_SQL),
+    "q16_supplier_counts": (tpch.q16_supplier_counts, tpch.Q16_SQL),
+    "q19_disjunctive_revenue": (tpch.q19_disjunctive_revenue, tpch.Q19_SQL),
+    "q6_forecast_revenue": (tpch.q6_forecast_revenue, tpch.Q6_SQL),
+    "q9_nation_profit": (tpch.q9_nation_profit, tpch.Q9_SQL),
+    "q12_priority_shipments": (tpch.q12_priority_shipments, tpch.Q12_SQL),
+    "containment_dedup_pairs": (dedup.containment_dedup_pairs, dedup.CONTAINMENT_SQL),
+    "prefix_containment_pairs": (dedup.prefix_containment_pairs, dedup.CONTAINMENT_SQL),
+    "sqrt_temperature_mix": (
+        curation.sqrt_temperature_mix, curation.SQRT_TEMPERATURE_SQL
+    ),
+    "jl_project_embeddings": (
+        retrieval.jl_project_embeddings, retrieval.JL_PROJECT_SQL
+    ),
+    "jl_distortion_check": (retrieval.jl_distortion_check, retrieval.JL_DISTORTION_SQL),
+    "rolling_median_values": (events.rolling_median_values, events.ROLLING_MEDIAN_SQL),
+    "cascade_delete_audit": (tpch.cascade_delete_audit, tpch.CASCADE_DELETE_SQL),
+    "semantic_dedup_docs": (dedup.semantic_dedup_docs, None),
+    "curation_pipeline": (curation.curation_pipeline, curation.CURATION_PIPELINE_SQL),
+    "stratified_sample_docs": (
+        curation.stratified_sample_docs, curation.STRATIFIED_SAMPLE_SQL
+    ),
+    "leakage_safe_split": (
+        curation.leakage_safe_split, curation.LEAKAGE_SAFE_SPLIT_SQL
+    ),
+    "charlm_doc_scores": (curation.charlm_doc_scores, curation.CHARLM_SCORES_SQL),
+    "bpe_merges": (curation.bpe_merges, None),
+    "bpe_check": (curation.bpe_check, curation.BPE_CHECK_SQL),
+    "bpe_doc_tokens": (curation.bpe_doc_tokens, None),
+    "bpe_encode_check": (curation.bpe_encode_check, curation.BPE_ENCODE_CHECK_SQL),
+    "weighted_sample_docs": (
+        curation.weighted_sample_docs, curation.WEIGHTED_SAMPLE_SQL
+    ),
+    "incremental_dedup_delta": (dedup.incremental_dedup_delta, None),
+    "incremental_dedup_check": (
+        dedup.incremental_dedup_check, dedup.INCREMENTAL_DEDUP_CHECK_SQL
+    ),
+    "events_gapfill_locf": (events.events_gapfill_locf, events.EVENTS_GAPFILL_SQL),
+    "order_window_shipments": (events.order_window_shipments, events.ORDER_WINDOW_SQL),
+    "purchase_window_events": (
+        events.purchase_window_events, events.PURCHASE_WINDOW_SQL
+    ),
+    "ewma_user_values": (events.ewma_user_values, events.EWMA_USER_SQL),
+    "incremental_daily_agg": (
+        events.incremental_daily_agg, events.INCREMENTAL_DAILY_SQL
+    ),
+    "event_transition_matrix": (
+        events.event_transition_matrix, events.EVENT_TRANSITION_SQL
+    ),
+    "session_path_counts": (events.session_path_counts, events.SESSION_PATH_SQL),
+    "value_anomaly_flags": (events.value_anomaly_flags, events.VALUE_ANOMALY_SQL),
+    "price_discount_corr": (stats.price_discount_corr, stats.PRICE_DISCOUNT_CORR_SQL),
+    "price_histogram": (stats.price_histogram, stats.PRICE_HISTOGRAM_SQL),
+    "hll_events_rollup": (sketches.hll_events_rollup, sketches.HLL_EVENTS_SQL),
+    "token_heavy_hitters": (
+        sketches.token_heavy_hitters, sketches.TOKEN_HEAVY_HITTERS_SQL
+    ),
+    "embedding_pca_project": (stats.embedding_pca_project, None),
+    "pca_check": (stats.pca_check, stats.PCA_CHECK_SQL),
+    "value_outliers_iqr": (stats.value_outliers_iqr, stats.VALUE_OUTLIERS_SQL),
+    "priority_status_dependence": (
+        stats.priority_status_dependence, stats.PRIORITY_STATUS_DEP_SQL
+    ),
+    "suppkey_skew_report": (stats.suppkey_skew_report, stats.SUPPKEY_SKEW_SQL),
+    "winsorized_price_stats": (
+        stats.winsorized_price_stats, stats.WINSORIZED_PRICE_SQL
+    ),
+    "token_zipf_fit": (text.token_zipf_fit, text.TOKEN_ZIPF_SQL),
+    "token_pmi_pairs": (text.token_pmi_pairs, text.TOKEN_PMI_SQL),
+    "price_decile_profile": (stats.price_decile_profile, stats.PRICE_DECILE_SQL),
+    "fulfillment_latency_quantiles": (
+        stats.fulfillment_latency_quantiles, stats.FULFILLMENT_LATENCY_SQL
+    ),
+    "user_value_trend": (events.user_value_trend, events.USER_VALUE_TREND_SQL),
+    "value_bootstrap_ci": (stats.value_bootstrap_ci, stats.VALUE_BOOTSTRAP_SQL),
+    "embedding_model_scores": (
+        stats.embedding_model_scores, stats.EMBEDDING_SCORES_SQL
+    ),
+    "trade_pagerank": (graphs.trade_pagerank, None),
+    "trade_pagerank_weighted": (graphs.trade_pagerank_weighted, None),
+    "weighted_pagerank_check": (
+        graphs.weighted_pagerank_check, graphs.WEIGHTED_PAGERANK_CHECK_SQL
+    ),
+    "trade_ppr_nation0": (graphs.trade_ppr_nation0, None),
+    "ppr_check": (graphs.ppr_check, graphs.PPR_CHECK_SQL),
+    "pagerank_check": (graphs.pagerank_check, graphs.PAGERANK_CHECK_SQL),
+    "supplier_cotrade_triangles": (
+        graphs.supplier_cotrade_triangles, graphs.SUPPLIER_TRIANGLES_SQL
+    ),
+    "trade_kcore": (graphs.trade_kcore, None),
+    "kcore_check": (graphs.kcore_check, graphs.KCORE_CHECK_SQL),
+    "trade_hits": (graphs.trade_hits, None),
+    "hits_check": (graphs.hits_check, graphs.HITS_CHECK_SQL),
+    "minhash_recall_check": (
+        verification.minhash_recall_check, verification.MINHASH_RECALL_SQL
+    ),
+    "simhash_recall_check": (
+        verification.simhash_recall_check, verification.SIMHASH_RECALL_SQL
+    ),
+    "knn_recall_check": (verification.knn_recall_check, verification.KNN_RECALL_SQL),
+    "embedding_neardup_check": (
+        verification.embedding_neardup_check, verification.EMBEDDING_NEARDUP_CHECK_SQL
+    ),
+    "semantic_dedup_check": (
+        verification.semantic_dedup_check, verification.SEMANTIC_DEDUP_CHECK_SQL
+    ),
+    "pq_recall_check": (verification.pq_recall_check, verification.PQ_RECALL_SQL),
+    "ivfpq_recall_check": (
+        verification.ivfpq_recall_check, verification.IVFPQ_RECALL_SQL
+    ),
+    "packing_check": (verification.packing_check, verification.PACKING_CHECK_SQL),
+    "quantile_sketch_check": (
+        verification.quantile_sketch_check, verification.QUANTILE_SKETCH_SQL
+    ),
+    "winnow_guarantee_check": (
+        verification.winnow_guarantee_check, verification.WINNOW_GUARANTEE_SQL
+    ),
+    "repeated_ngram_spans": (dedup.repeated_ngram_spans, dedup.REPEATED_SPANS_SQL),
+    "dup_span_doc_stats": (dedup.dup_span_doc_stats, dedup.DUP_SPAN_STATS_SQL),
+    "dsir_importance_weights": (curation.dsir_importance_weights, curation.DSIR_SQL),
+    "dedup_survivors": (dedup.dedup_survivors, dedup.DEDUP_SURVIVORS_SQL),
+    "value_mad_outliers": (stats.value_mad_outliers, stats.VALUE_MAD_SQL),
+    "zorder_docs": (text.zorder_docs, text.ZORDER_SQL),
+    "score_calibration_bins": (
+        stats.score_calibration_bins, stats.SCORE_CALIBRATION_SQL
+    ),
+    "score_pr_curve": (stats.score_pr_curve, stats.SCORE_PR_SQL),
+    "score_auc": (stats.score_auc, stats.SCORE_AUC_SQL),
+    "priority_loo_encoding": (tpch.priority_loo_encoding, tpch.PRIORITY_LOO_SQL),
+    "value_drift_ks": (stats.value_drift_ks, stats.VALUE_DRIFT_KS_SQL),
+    "hybrid_search_rrf": (retrieval.hybrid_search_rrf, retrieval.HYBRID_RRF_SQL),
+    "trade_bfs_hops": (graphs.trade_bfs_hops, graphs.TRADE_BFS_SQL),
+    "part_price_skyline": (tpch.part_price_skyline, tpch.PART_SKYLINE_SQL),
+    "score_ndcg": (retrieval.score_ndcg, retrieval.SCORE_NDCG_SQL),
+    "part_affinity_cosine": (
+        retrieval.part_affinity_cosine, retrieval.PART_AFFINITY_SQL
+    ),
+    "token_pmi_bigrams": (text.token_pmi_bigrams, text.PMI_SQL),
+    "value_acf_by_type": (events.value_acf_by_type, events.ACF_SQL),
+    "customer_spend_gini": (stats.customer_spend_gini, stats.GINI_SQL),
+    "token_entropy_by_lang": (text.token_entropy_by_lang, text.ENTROPY_SQL),
+    "benford_order_totals": (stats.benford_order_totals, stats.BENFORD_SQL),
+    "part_name_fuzzy_pairs": (dedup.part_name_fuzzy_pairs, dedup.FUZZY_PAIRS_SQL),
+    "ranking_rbo": (retrieval.ranking_rbo, retrieval.RBO_SQL),
+    "value_trend_ols": (events.value_trend_ols, events.TREND_SQL),
+    "value_cusum_changepoint": (events.value_cusum_changepoint, events.CUSUM_SQL),
+    "event_dow_uniformity": (events.event_dow_uniformity, events.DOW_SQL),
+    "rfm_segments": (tpch.rfm_segments, tpch.RFM_SQL),
+    "phrase_match_counts": (retrieval.phrase_match_counts, retrieval.PHRASE_SQL),
+    "fuzzy_name_clusters": (dedup.fuzzy_name_clusters, dedup.FUZZY_CLUSTERS_SQL),
+    "value_p95_by_type": (stats.value_p95_by_type, stats.P95_SQL),
+    "source_char_profile": (text.source_char_profile, text.CHAR_PROFILE_SQL),
+    "blocklist_term_hits": (curation.blocklist_term_hits, curation.BLOCKLIST_SQL),
+    "cumulative_unique_users": (
+        events.cumulative_unique_users, events.CUMULATIVE_USERS_SQL
+    ),
+    "interarrival_p50_by_type": (
+        events.interarrival_p50_by_type, events.INTERARRIVAL_SQL
+    ),
+    "funnel_within_window": (events.funnel_within_window, events.FUNNEL_WINDOW_SQL),
+    "doc_trigram_novelty": (curation.doc_trigram_novelty, curation.NOVELTY_SQL),
+    "wau_trailing_7d": (events.wau_trailing_7d, events.WAU_SQL),
+    "daily_new_vs_returning": (
+        events.daily_new_vs_returning, events.NEW_VS_RETURNING_SQL
+    ),
+    "revenue_pareto_8020": (stats.revenue_pareto_8020, stats.PARETO_SQL),
+    "weighted_median_price": (stats.weighted_median_price, stats.WEIGHTED_MEDIAN_SQL),
+    "heaps_law_fit": (text.heaps_law_fit, text.HEAPS_SQL),
+    "gopher_quality_flags": (curation.gopher_quality_flags, curation.GOPHER_SQL),
+    "incremental_daily_rollup": (
+        tpch.incremental_daily_rollup, tpch.INCREMENTAL_ROLLUP_SQL
+    ),
+    "last_touch_attribution": (events.last_touch_attribution, events.LAST_TOUCH_SQL),
+    "tokenizer_fertility_by_lang": (
+        text.tokenizer_fertility_by_lang, text.FERTILITY_SQL
+    ),
+    "user_rolling_7d_value": (events.user_rolling_7d_value, events.USER_ROLLING_SQL),
+    "lang_id_confusion": (text.lang_id_confusion, text.LANG_ID_CONFUSION_SQL),
+    "price_quartiles_exact": (stats.price_quartiles_exact, stats.PRICE_QUARTILES_SQL),
+    "event_type_transitions": (
+        events.event_type_transitions, events.EVENT_TRANSITIONS_SQL
+    ),
+    "value_percentile_grid_by_type": (
+        stats.value_percentile_grid_by_type, stats.PERCENTILE_GRID_SQL
+    ),
+    "nearest_click_gap": (events.nearest_click_gap, events.NEAREST_CLICK_SQL),
+    "q21_bottleneck_suppliers": (tpch.q21_bottleneck_suppliers, tpch.Q21_SQL),
+    "null_key_order_ranks": (tpch.null_key_order_ranks, tpch.NULL_KEY_ORDER_RANKS_SQL),
+    "kmv_priority_overlap": (sketches.kmv_priority_overlap, None),
+    "kmv_overlap_check": (sketches.kmv_overlap_check, sketches.KMV_OVERLAP_CHECK_SQL),
+    "ams_skew_profile": (sketches.ams_skew_profile, None),
+    "ams_moment_check": (sketches.ams_moment_check, sketches.AMS_MOMENT_CHECK_SQL),
+    "chunk_docs_sentences": (text.chunk_docs_sentences, text.CHUNK_DOCS_SENTENCES_SQL),
+    "redact_pii_docs": (curation.redact_pii_docs, curation.REDACT_PII_SQL),
+    "lang_temperature_weights": (
+        curation.lang_temperature_weights, curation.LANG_TEMPERATURE_SQL
+    ),
+    "source_template_prefix": (
+        curation.source_template_prefix, curation.SOURCE_TEMPLATE_PREFIX_SQL
+    ),
+    "dup_sentence_stats": (dedup.dup_sentence_stats, dedup.DUP_SENTENCE_STATS_SQL),
+    "exact_span_dedup": (dedup.exact_span_dedup, dedup.EXACT_SPAN_DEDUP_SQL),
+    "drop_dup_sentences_docs": (
+        dedup.drop_dup_sentences_docs, dedup.DROP_DUP_SENTENCES_SQL
+    ),
+    "bloom_decontaminate_docs": (sketches.bloom_decontaminate_docs, None),
+    "bloom_decontam_check": (
+        sketches.bloom_decontam_check, sketches.BLOOM_DECONTAM_CHECK_SQL
+    ),
+    "cms_part_frequencies": (sketches.cms_part_frequencies, None),
+    "cms_check": (sketches.cms_check, sketches.CMS_CHECK_SQL),
 }

@@ -1,9 +1,4 @@
-"""Column helpers shared by the plan modules.
-
-Imports nothing from the registry: ``analytics.py`` imports every plan
-module, so a helper defined there cannot be imported by a plan module
-without an import cycle.
-"""
+"""Column helpers shared by the domain plan modules."""
 
 from __future__ import annotations
 

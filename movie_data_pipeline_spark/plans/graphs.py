@@ -1,15 +1,18 @@
-"""Graph-analytics queries over the warehouse: PageRank centrality on
-the customer↔supplier trade graph derived from orders ⋈ lineitem.
+"""Graph-analytics plans over the customer↔supplier trade graph derived
+from orders ⋈ lineitem: PageRank (plain, weighted, personalized),
+HITS, k-core, triangle counts and multi-source BFS hops.
 
-Verification follows the iterative-operator discipline established by
-``dedup_clusters``/``packing_check``: the per-node ranks are rows-only
-(a 10-round damped power iteration is not SQL-expressible), and the
-oracled gate ``pagerank_check`` pins the algorithm's INVARIANTS with
-exact measures DuckDB recomputes independently — node/edge counts of
-the derived graph, the Σ ranks = N conservation law (exact in real
-arithmetic; 1e-6·N float tolerance), and rank positivity with the
-(1−d) floor. A planted-graph unit test checks the VALUES against the
-closed-form stationary solution.
+Verification follows the iterative-operator discipline of
+``dedup_clusters``/``packing_check``: the per-node outputs are
+rows-only (a damped power iteration is not SQL-expressible), and each
+oracled ``*_check`` gate pins the algorithm's INVARIANTS with exact
+measures DuckDB recomputes independently — node/edge counts of the
+derived graph, the Σ ranks = N conservation law (1e-6·N float
+tolerance), and rank positivity with the (1−d) floor. Planted-graph
+unit tests check the VALUES against closed-form solutions.
+
+Every entry is a (builder, SQL twin) pair registered in
+plans/analytics.py and follows the determinism rules stated there.
 """
 
 from __future__ import annotations
@@ -24,6 +27,7 @@ from pyspark.sql.types import StructType
 
 from ..operators.graph import pagerank
 from ..sources.catalog import load_table
+
 
 # ---------------------------------------------------------------------------
 # Derived-graph memo (r7 verdict item 2). Six registry entries run a
@@ -496,16 +500,56 @@ SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM nodes) AS n_nodes,
 """
 
 
-GRAPH_QUERIES = {
-    "trade_pagerank": (trade_pagerank, None),
-    "trade_pagerank_weighted": (trade_pagerank_weighted, None),
-    "weighted_pagerank_check": (weighted_pagerank_check, WEIGHTED_PAGERANK_CHECK_SQL),
-    "trade_ppr_nation0": (trade_ppr_nation0, None),
-    "ppr_check": (ppr_check, PPR_CHECK_SQL),
-    "pagerank_check": (pagerank_check, PAGERANK_CHECK_SQL),
-    "supplier_cotrade_triangles": (supplier_cotrade_triangles, SUPPLIER_TRIANGLES_SQL),
-    "trade_kcore": (trade_kcore, None),
-    "kcore_check": (kcore_check, KCORE_CHECK_SQL),
-    "trade_hits": (trade_hits, None),
-    "hits_check": (hits_check, HITS_CHECK_SQL),
-}
+# ---------------------------------------------------------------------------
+# BFS over the trade graph: minimum hop distance from the lowest-key
+# supplier's node, explored 3 rounds (the graph is bipartite
+# customer↔supplier, so 3 hops = suppliers' customers, their other
+# suppliers, and THOSE suppliers' customers). All-integer output →
+# the oracle hash compares the entire reachability map, unlike the
+# float-rank graph entries that need invariant gates. The DuckDB twin
+# is a textbook recursive CTE; Spark explores iteratively with the
+# graph family's co-partition + localCheckpoint discipline
+# (operators/graph.py::bfs_hops).
+# ---------------------------------------------------------------------------
+
+
+def trade_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.graph import bfs_hops
+
+    # single deterministic source present at every SF: the minimum
+    # supplier key (nation-keyed seed sets are empty at the smallest
+    # fixtures, which would verify nothing)
+    seeds = (
+        load_table(spark, sf, "supplier")
+        .agg((-F.min("s_suppkey")).alias("node"))
+    )
+    return (
+        bfs_hops(_trade_edges(spark, sf), seeds, max_hops=3)
+        .select(
+            F.col("node").cast("long").alias("node"),
+            F.col("hops").cast("int").alias("hops"),
+        )
+        .sortWithinPartitions("node")
+    )
+
+
+TRADE_BFS_SQL = """
+WITH RECURSIVE pairs AS (
+    SELECT DISTINCT o_custkey AS cust, -l_suppkey AS supp
+    FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+), edges AS (
+    SELECT cust AS src, supp AS dst FROM pairs
+    UNION ALL
+    SELECT supp AS src, cust AS dst FROM pairs
+), seeds AS (
+    SELECT CAST(-MIN(s_suppkey) AS BIGINT) AS node FROM supplier
+), bfs(node, hops) AS (
+    SELECT node, 0 AS hops FROM seeds
+    UNION
+    SELECT e.dst AS node, b.hops + 1 AS hops
+    FROM bfs b JOIN edges e ON e.src = b.node
+    WHERE b.hops < 3
+)
+SELECT CAST(node AS BIGINT) AS node, CAST(MIN(hops) AS INT) AS hops
+FROM bfs GROUP BY node ORDER BY node
+"""

@@ -106,23 +106,12 @@ def q3_most_prolific_director(movies: DataFrame) -> DataFrame:
     )
 
 
-Q3_SQL = """
-SELECT director,
-       COUNT(*) AS movie_count,
-       STRING_AGG(DISTINCT title, ', ' ORDER BY title) AS movies
-FROM movies
-WHERE director IS NOT NULL AND director != 'N/A'
-GROUP BY director
-ORDER BY movie_count DESC, director ASC
-LIMIT 1
-"""
-
-# Engine-dialect twin for the SQL-runner path (the reference's CLI runs
+# Q3 in Spark SQL for the SQL-runner path (the reference's CLI runs
 # SQLite dialect on SQLite, etl.py:295-321; ours runs Spark SQL on
-# Spark). Same sorted-distinct semantics; DuckDB's
-# `STRING_AGG(DISTINCT x ORDER BY x)` and Spark's
-# `string_agg(DISTINCT x) WITHIN GROUP (ORDER BY x)` are mutually
-# unparsable, hence two strings.
+# Spark). The sorted-distinct aggregate is spelled
+# `string_agg(DISTINCT x) WITHIN GROUP (ORDER BY x)`, which DuckDB
+# cannot parse (its form is `STRING_AGG(DISTINCT x ORDER BY x)`), hence
+# the _SPARK suffix.
 Q3_SQL_SPARK = """
 SELECT director,
        COUNT(*) AS movie_count,

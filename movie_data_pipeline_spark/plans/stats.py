@@ -1,24 +1,178 @@
-"""Numeric statistics families: exact-decimal Pearson correlation and
-equi-width histograms.
+"""Numeric statistics: exact-decimal correlation, histograms, exact
+quantiles and percentile grids, outlier fences (IQR, MAD,
+winsorizing), chi-square dependence, skew reports, bootstrap
+intervals, drift tests (PSI, KS), concentration (Gini, Pareto,
+weighted median), the Benford audit, PCA over the embeddings, and
+model evaluation at data scale (calibration bins, precision/recall
+sweep, ROC-AUC, the sigmoid scorer).
 
 ``F.corr`` (and DuckDB's ``corr``) accumulate doubles in partition
-order, so their low bits are not reproducible cross-engine — the same
-class of flake the module-wide DECIMAL-sum discipline exists to kill
-(plans/analytics.py determinism rules). Correlation here is assembled
-from five exact DECIMAL sums (Σx, Σy, Σxy, Σx², Σy²): per-row double
-products are IEEE-identical in both engines, the decimal sums are
-order-independent, and the final closed-form division/sqrt runs on
-bit-identical inputs. One aggregation pass, no window, no shuffle
-beyond the single partial/final agg — the same shape at 100 TB.
+order, so their low bits are not reproducible across engines.
+Moments here are assembled from exact DECIMAL sums instead: per-row
+double products are IEEE-identical in both engines, the decimal sums
+are order-independent, and the final closed-form division/sqrt runs on
+bit-identical inputs. Exact order statistics come from the parallel
+rank operators (operators/ranks.py), never a single-partition window.
+
+Every entry is a (builder, SQL twin) pair registered in
+plans/analytics.py and follows the determinism rules stated there.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import math
+
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..sources.catalog import load_table
-from .columns import dec_sum, sigmoid_score
+from ..operators.ranks import constant_partition_key
+from ..sources.catalog import load_events, load_table
+from .columns import SIGMOID_SCORE_SQL, dec_sum, sigmoid_score
+
+
+# ---------------------------------------------------------------------------
+# Exact percentiles (sort-based, linear interpolation in both engines)
+# ---------------------------------------------------------------------------
+
+def price_quantiles_by_segment(spark: SparkSession, sf: str) -> DataFrame:
+    customer = load_table(spark, sf, "customer")
+    orders = load_table(spark, sf, "orders")
+    q = F.expr("percentile(o_totalprice, array(0.25D, 0.5D, 0.75D))")
+    return (
+        orders.join(customer, orders.o_custkey == customer.c_custkey)
+        .groupBy("c_mktsegment")
+        .agg(q.alias("q"), F.count(F.lit(1)).alias("order_count"))
+        .select(
+            "c_mktsegment",
+            F.round(F.element_at("q", 1), 4).alias("p25"),
+            F.round(F.element_at("q", 2), 4).alias("p50"),
+            F.round(F.element_at("q", 3), 4).alias("p75"),
+            "order_count",
+        )
+    )
+
+
+PRICE_QUANTILES_SQL = """
+SELECT c_mktsegment,
+       ROUND(quantile_cont(o_totalprice, 0.25), 4) AS p25,
+       ROUND(quantile_cont(o_totalprice, 0.50), 4) AS p50,
+       ROUND(quantile_cont(o_totalprice, 0.75), 4) AS p75,
+       COUNT(*) AS order_count
+FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+GROUP BY c_mktsegment
+"""
+
+
+# ---------------------------------------------------------------------------
+# Distribution drift (PSI) between the event stream's two time halves
+# — the training-data monitoring primitive ("did this source's value
+# distribution move?"). Binning is fixed-width over the observed
+# [min, max] (identical IEEE arithmetic from identical scalar inputs
+# on both engines — deciles would interpolate engine-specifically);
+# Laplace-smoothed shares guard empty bins; each PSI term
+# (p−q)·ln(p/q) rounds to 6 decimals BEFORE the exact decimal sum —
+# the charlm log discipline (curation.py:378-392) that absorbs any
+# last-ulp libm ln() divergence. One scan + one 1-row broadcast of
+# the global bounds; at 100 TB this is a single pass per monitored
+# column.
+# ---------------------------------------------------------------------------
+
+def value_drift_psi(spark: SparkSession, sf: str) -> DataFrame:
+    e = load_events(spark, sf).select("ts_sec", F.col("value").cast("double"))
+    bounds = e.agg(
+        F.min("ts_sec").alias("t0"),
+        F.max("ts_sec").alias("t1"),
+        F.min("value").alias("v0"),
+        F.max("value").alias("v1"),
+    )
+    binned = (
+        e.crossJoin(F.broadcast(bounds))  # 1-row side
+        .select(
+            # greatest(width, 1e-300) guards the constant-column case
+            # (v1 == v0 — a stuck sensor is exactly what a drift
+            # monitor sees): 0/0 would NaN-bin on Spark and CRASH the
+            # DuckDB cast; with the floor every value lands in bin 0
+            # identically on both engines.
+            F.least(
+                F.floor(
+                    (F.col("value") - F.col("v0"))
+                    / F.greatest(
+                        (F.col("v1") - F.col("v0")) / F.lit(10.0),
+                        F.lit(1e-300),
+                    )
+                ).cast("int"),
+                F.lit(9),
+            ).alias("bin_id"),
+            (F.col("ts_sec") * 2 < F.col("t0") + F.col("t1")).alias("early"),
+        )
+    )
+    counts = binned.groupBy("bin_id").agg(
+        F.sum(F.when(F.col("early"), 1).otherwise(0)).alias("n_early"),
+        F.sum(F.when(F.col("early"), 0).otherwise(1)).alias("n_late"),
+    )
+    totals = counts.agg(
+        F.sum("n_early").alias("te"), F.sum("n_late").alias("tl")
+    )
+    p = (F.col("n_early") + 1) / (F.col("te") + 10)
+    q = (F.col("n_late") + 1) / (F.col("tl") + 10)
+    per_bin = (
+        counts.crossJoin(F.broadcast(totals))  # 1-row side
+        .select(
+            "bin_id", "n_early", "n_late",
+            F.round((p - q) * F.log(p / q), 6).alias("psi_term"),
+        )
+    )
+    total = per_bin.agg(
+        F.lit(-1).alias("bin_id"),
+        F.sum("n_early").alias("n_early"),
+        F.sum("n_late").alias("n_late"),
+        F.round(
+            F.sum(F.col("psi_term").cast("decimal(30,6)")).cast("double"), 6
+        ).alias("psi_term"),
+    )
+    return per_bin.unionByName(total).orderBy("bin_id")
+
+
+VALUE_DRIFT_PSI_SQL = """
+WITH e AS (
+  SELECT CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
+         CAST(value AS DOUBLE) AS value
+  FROM events
+),
+b AS (SELECT MIN(ts_sec) AS t0, MAX(ts_sec) AS t1,
+             MIN(value) AS v0, MAX(value) AS v1 FROM e),
+binned AS (
+  SELECT LEAST(CAST(FLOOR((value - v0)
+                          / GREATEST((v1 - v0) / 10.0, 1e-300)) AS INT), 9)
+           AS bin_id,
+         ts_sec * 2 < t0 + t1 AS early
+  FROM e, b
+),
+counts AS (
+  SELECT bin_id,
+         SUM(CASE WHEN early THEN 1 ELSE 0 END)::BIGINT AS n_early,
+         SUM(CASE WHEN early THEN 0 ELSE 1 END)::BIGINT AS n_late
+  FROM binned GROUP BY bin_id
+),
+t AS (SELECT SUM(n_early) AS te, SUM(n_late) AS tl FROM counts),
+per_bin AS (
+  SELECT bin_id, n_early, n_late,
+         ROUND((CAST(n_early + 1 AS DOUBLE) / (te + 10)
+                - CAST(n_late + 1 AS DOUBLE) / (tl + 10))
+               * ln((CAST(n_early + 1 AS DOUBLE) / (te + 10))
+                    / (CAST(n_late + 1 AS DOUBLE) / (tl + 10))), 6)
+           AS psi_term
+  FROM counts, t
+)
+SELECT * FROM (
+  SELECT bin_id, n_early, n_late, psi_term FROM per_bin
+  UNION ALL
+  SELECT -1, SUM(n_early)::BIGINT, SUM(n_late)::BIGINT,
+         ROUND(CAST(SUM(CAST(psi_term AS DECIMAL(30,6))) AS DOUBLE), 6)
+  FROM per_bin
+)
+ORDER BY bin_id
+"""
 
 
 def price_discount_corr(spark: SparkSession, sf: str) -> DataFrame:
@@ -103,119 +257,6 @@ SELECT CAST(floor(l_extendedprice / 5000) AS BIGINT) AS price_bin,
          AS bin_revenue
 FROM lineitem
 GROUP BY 1 ORDER BY 1
-"""
-
-
-def hll_events_rollup(spark: SparkSession, sf: str) -> DataFrame:
-    """Mergeable distinct-count sketches (Apache DataSketches HLL via
-    the Spark 3.5+ ``hll_sketch_agg``/``hll_union_agg`` builtins): one
-    fixed-size sketch per event day, then the per-day sketches MERGE
-    into an all-days estimate without rescanning raw events — the
-    pre-aggregation contract that answers "distinct users over any
-    date range" at 100 TB from a sketch table millions of times
-    smaller than the event log (one pass, fixed memory per group,
-    associative merge — the same scale posture as percentile_approx).
-
-    Oracle pattern = ``quantile_sketch_check``: sketch internals are
-    not SQL-derivable, so each row emits the EXACT distinct count
-    (DuckDB recomputes it independently) plus a tolerance predicate
-    pinning the estimate within 5% of exact — comfortably above
-    HLL's ~0.4% standard error at lgK=12 yet tight enough to catch
-    any merge/registration bug. The exact COUNT(DISTINCT) side is
-    verification-scoped; the sketch side is the production path."""
-    from .analytics import load_events
-
-    e = load_events(spark, sf).select(
-        "user_id", F.expr("ts_us DIV 86400000000").alias("day_idx")
-    )
-
-    def check(df: DataFrame, scope) -> DataFrame:
-        return df.select(
-            scope.alias("scope"),
-            F.col("n_exact").cast("long").alias("n_exact"),
-            (
-                F.abs(F.hll_sketch_estimate("sk") - F.col("n_exact"))
-                <= 0.05 * F.col("n_exact")
-            ).alias("within_5pct"),
-        )
-
-    daily = e.groupBy("day_idx").agg(
-        F.hll_sketch_agg("user_id").alias("sk"),
-        F.countDistinct("user_id").alias("n_exact"),
-    )
-    # merge path: union the per-day sketches (NOT the raw events);
-    # both sides of the crossJoin are single rows
-    total = daily.agg(F.hll_union_agg("sk").alias("sk")).crossJoin(
-        e.agg(F.countDistinct("user_id").alias("n_exact"))
-    )
-    return (
-        check(daily, F.col("day_idx").cast("string"))
-        .unionByName(check(total, F.lit("ALL")))
-        .orderBy("scope")
-    )
-
-
-HLL_EVENTS_SQL = """
-WITH e AS (
-  SELECT user_id, epoch_us(ts) // 86400000000 AS day_idx FROM events
-),
-d AS (
-  SELECT CAST(day_idx AS VARCHAR) AS scope,
-         CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact,
-         TRUE AS within_5pct
-  FROM e GROUP BY day_idx
-),
-a AS (
-  SELECT 'ALL' AS scope, CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact,
-         TRUE AS within_5pct
-  FROM e
-)
-SELECT * FROM d UNION ALL SELECT * FROM a ORDER BY scope
-"""
-
-
-def token_heavy_hitters(spark: SparkSession, sf: str) -> DataFrame:
-    """Heavy-hitter terms via the ``approx_top_k`` sketch (Spark 4):
-    one pass, mergeable partial state, memory bounded by
-    maxItemsTracked instead of vocabulary size — the sketch answer to
-    "top terms" that never materializes a full term dictionary per
-    partition. The sketch returns its top-25, re-ranked and cut to 20
-    under the deterministic (count desc, term) order.
-
-    Oracle note: on THIS corpus the sketch is provably exact — the
-    document vocabulary (31 distinct tokens, checked at all shipped
-    SFs) is far below the 10k tracked items, so every count is a true
-    count and DuckDB's exact top-20 must hash-match (the rank-20
-    boundary count is unique at every SF, so the cut is stable). On a
-    corpus with vocabulary above maxItemsTracked the counts become
-    estimates and this entry would demote to rows-only — that
-    precondition is the same checked-corpus discipline as
-    frame_samples' ASCII assumption."""
-    from ..functions.text import bpe_ish_tokens
-
-    docs = load_table(spark, sf, "documents")
-    sk = docs.select(
-        F.explode(bpe_ish_tokens(F.col("text"))).alias("w")
-    ).agg(F.expr("approx_top_k(w, 25)").alias("tk"))
-    return (
-        sk.select(F.explode("tk").alias("s"))
-        .select(
-            F.col("s.item").alias("term"),
-            F.col("s.count").cast("long").alias("n"),
-        )
-        .orderBy(F.desc("n"), F.asc("term"))
-        .limit(20)
-    )
-
-
-TOKEN_HEAVY_HITTERS_SQL = r"""
-WITH t AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^\w'']+'),
-                x -> x != '')) AS term
-  FROM documents
-),
-c AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS n FROM t GROUP BY term)
-SELECT term, n FROM c ORDER BY n DESC, term LIMIT 20
 """
 
 
@@ -311,8 +352,6 @@ FROM embeddings
 # ---------------------------------------------------------------------------
 
 def value_outliers_iqr(spark: SparkSession, sf: str) -> DataFrame:
-    from .analytics import load_events
-
     e = load_events(spark, sf).select("event_type", "value")
     q = e.groupBy("event_type").agg(
         F.expr("percentile(value, array(0.25D, 0.75D))").alias("q"),
@@ -599,101 +638,6 @@ ORDER BY l_returnflag
 
 
 # ---------------------------------------------------------------------------
-# Zipf rank-frequency fit over the token distribution: least-squares
-# slope of ln(freq) on ln(rank) — the corpus-health statistic (natural
-# text sits near −1; synthetic or deduplicated text drifts). Ranks are
-# integers with a deterministic tie-break, per-term ln products are
-# rounded once then decimal-summed, and the closed-form slope divides
-# two such sums — the same fixed-operation-order discipline as the
-# Pearson correlation above.
-# ---------------------------------------------------------------------------
-
-def token_zipf_fit(spark: SparkSession, sf: str) -> DataFrame:
-    from ..operators.ranks import parallel_row_number
-
-    docs = load_table(spark, sf, "documents")
-    freqs = (
-        docs.select(
-            F.explode(F.split(F.lower(F.col("text")), r"[^\w']+")).alias("tok")
-        )
-        .filter(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    # rank = row_number over (freq DESC, tok ASC), vocabulary-sized but
-    # computed with the bucket-parallel operator anyway — ORDER BY
-    # -freq is the ASC image of the DESC sort, so the plain-window
-    # DuckDB oracle is unchanged
-    ranked = parallel_row_number(
-        freqs.withColumn("_negfreq", (-F.col("freq")).cast("long")),
-        "_negfreq",
-        ["tok"],
-        out_col="rnk",
-    ).drop("_negfreq")
-    t = ranked.select(
-        F.round(F.log(F.col("rnk").cast("double")), 9).alias("x"),
-        F.round(F.log(F.col("freq").cast("double")), 9).alias("y"),
-    ).select(
-        "x",
-        "y",
-        F.round(F.col("x") * F.col("y"), 9).alias("xy"),
-        F.round(F.col("x") * F.col("x"), 9).alias("xx"),
-    )
-    agg = t.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("x").cast("decimal(30,9)")).alias("sx"),
-        F.sum(F.col("y").cast("decimal(30,9)")).alias("sy"),
-        F.sum(F.col("xy").cast("decimal(30,9)")).alias("sxy"),
-        F.sum(F.col("xx").cast("decimal(30,9)")).alias("sxx"),
-    )
-    n, sx, sy, sxy, sxx = (
-        F.col("n"),
-        F.col("sx").cast("double"),
-        F.col("sy").cast("double"),
-        F.col("sxy").cast("double"),
-        F.col("sxx").cast("double"),
-    )
-    return agg.select(
-        n.cast("long").alias("n_tokens_distinct"),
-        F.round((n * sxy - sx * sy) / (n * sxx - sx * sx), 6).alias(
-            "zipf_slope"
-        ),
-    )
-
-
-TOKEN_ZIPF_SQL = r"""
-WITH freqs AS (
-    SELECT t AS tok, COUNT(*) AS freq FROM (
-        SELECT unnest(list_filter(string_split_regex(lower(text), '[^\w'']+'),
-                                  x -> x != '')) AS t
-        FROM documents
-    ) GROUP BY t
-), ranked AS (
-    SELECT freq, ROW_NUMBER() OVER (ORDER BY freq DESC, tok ASC) AS rnk
-    FROM freqs
-), t AS (
-    SELECT ROUND(ln(CAST(rnk AS DOUBLE)), 9) AS x,
-           ROUND(ln(CAST(freq AS DOUBLE)), 9) AS y
-    FROM ranked
-), t2 AS (
-    SELECT x, y, ROUND(x * y, 9) AS xy, ROUND(x * x, 9) AS xx FROM t
-), agg AS (
-    SELECT COUNT(*) AS n,
-           SUM(CAST(x AS DECIMAL(30,9))) AS sx,
-           SUM(CAST(y AS DECIMAL(30,9))) AS sy,
-           SUM(CAST(xy AS DECIMAL(30,9))) AS sxy,
-           SUM(CAST(xx AS DECIMAL(30,9))) AS sxx
-    FROM t2
-)
-SELECT CAST(n AS BIGINT) AS n_tokens_distinct,
-       ROUND((n * CAST(sxy AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-             / (n * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)),
-             6) AS zipf_slope
-FROM agg
-"""
-
-
-# ---------------------------------------------------------------------------
 # Block-bootstrap confidence interval for the per-type mean event
 # value — uncertainty quantification with the house no-RNG rule: each
 # row lands in one of 10 pseudo-replicates by md5 bucket (so
@@ -704,8 +648,6 @@ FROM agg
 # ---------------------------------------------------------------------------
 
 def value_bootstrap_ci(spark: SparkSession, sf: str) -> DataFrame:
-    from .analytics import load_events
-
     e = load_events(spark, sf).select("event_type", "event_id", "value")
     rep = F.pmod(
         F.conv(
@@ -875,166 +817,6 @@ ORDER BY o_orderpriority
 
 
 # ---------------------------------------------------------------------------
-# Per-user linear trend of event value over time: the closed-form
-# least-squares slope from five exact decimal moments per user — the
-# price_discount_corr discipline applied per group (one aggregation
-# pass over a user-keyed shuffle; no window, no iteration). Time is
-# scaled to days so slope magnitudes are readable; users need ≥ 3
-# observations and nonzero time variance for a defined slope.
-# ---------------------------------------------------------------------------
-
-def user_value_trend(spark: SparkSession, sf: str) -> DataFrame:
-    from .analytics import load_events
-
-    # t is an exact INTEGER day index (shifted by a constant to keep
-    # squares small): integer moments sum exactly at scale 0, and the
-    # one double product (t·v) stays far inside the range where
-    # decimal casts are bit-identical cross-engine. A continuous
-    # (fractional-day double) t at decimal scale 12 pushed t²·10¹²
-    # past 2⁵³, where the engines' double→decimal conversions diverge.
-    e = load_events(spark, sf).select(
-        "user_id",
-        (F.expr("ts_us DIV 86400000000") - 9000).alias("t"),
-        "value",
-    )
-    agg = e.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("t").cast("decimal(38,0)")).alias("st"),
-        F.sum(F.col("value").cast("decimal(30,6)")).alias("sv"),
-        F.sum((F.col("t") * F.col("value")).cast("decimal(30,6)")).alias("stv"),
-        F.sum((F.col("t") * F.col("t")).cast("decimal(38,0)")).alias("stt"),
-    )
-    n, st, sv, stv, stt = (
-        F.col("n"),
-        F.col("st").cast("double"),
-        F.col("sv").cast("double"),
-        F.col("stv").cast("double"),
-        F.col("stt").cast("double"),
-    )
-    return (
-        agg.filter(F.col("n") >= 3)
-        .select(
-            "user_id",
-            n.cast("long").alias("n_events"),
-            # floor-truncate, not ROUND: a raw double quotient can sit
-            # on a decimal half-way tie where the engines' ROUND rules
-            # diverge (hit once in 150k users at sf0.1); floor of the
-            # same double has no tie cases
-            (
-                F.floor(
-                    (n * stv - st * sv) / (n * stt - st * st) * 1e6
-                )
-                / 1e6
-                + 0.0
-            ).alias("trend_slope"),
-        )
-        .orderBy("user_id")
-    )
-
-
-USER_VALUE_TREND_SQL = """
-WITH e AS (
-    SELECT user_id, epoch_us(ts) // 86400000000 - 9000 AS t, value FROM events
-), agg AS (
-    SELECT user_id, COUNT(*) AS n,
-           SUM(CAST(t AS DECIMAL(38,0))) AS st,
-           SUM(CAST(value AS DECIMAL(30,6))) AS sv,
-           SUM(CAST(t * value AS DECIMAL(30,6))) AS stv,
-           SUM(CAST(t * t AS DECIMAL(38,0))) AS stt
-    FROM e GROUP BY user_id
-)
-SELECT user_id, CAST(n AS BIGINT) AS n_events,
-       FLOOR((n * CAST(stv AS DOUBLE) - CAST(st AS DOUBLE) * CAST(sv AS DOUBLE))
-             / (n * CAST(stt AS DOUBLE) - CAST(st AS DOUBLE) * CAST(st AS DOUBLE))
-             * 1e6) / 1e6 + 0.0 AS trend_slope
-FROM agg
-WHERE n >= 3
-ORDER BY user_id
-"""
-
-
-# ---------------------------------------------------------------------------
-# Pointwise mutual information over token co-occurrence — the
-# association statistic behind collocation mining and embedding prep.
-# Document-level co-occurrence on the distinct (doc, token) relation:
-# pair space is vocabulary-bounded (≤ C(|V|,2)) however large the
-# corpus, and PMI = log2(n12·N / (n1·n2)) evaluates exact integer
-# products (< 2^53 ⇒ exact doubles) in one fixed operation order.
-# ---------------------------------------------------------------------------
-
-def token_pmi_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    docs = load_table(spark, sf, "documents")
-    dt = (
-        docs.select(
-            "doc_id",
-            F.explode(F.split(F.lower(F.col("text")), r"[^\w']+")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-        .distinct()
-    )
-    n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
-    singles = dt.groupBy("tok").agg(F.count(F.lit(1)).alias("n_tok"))
-    a, b = dt.alias("a"), dt.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.doc_id") == F.col("b.doc_id"))
-            & (F.col("a.tok") < F.col("b.tok")),
-        )
-        .groupBy(F.col("a.tok").alias("tok_a"), F.col("b.tok").alias("tok_b"))
-        .agg(F.count(F.lit(1)).alias("n_both"))
-        .filter(F.col("n_both") >= 5)
-    )
-    sa = singles.select(F.col("tok").alias("tok_a"), F.col("n_tok").alias("n_a"))
-    sb = singles.select(F.col("tok").alias("tok_b"), F.col("n_tok").alias("n_b"))
-    return (
-        pairs.join(F.broadcast(sa), "tok_a")
-        .join(F.broadcast(sb), "tok_b")
-        .crossJoin(F.broadcast(n_docs))  # 1-row side
-        .select(
-            "tok_a",
-            "tok_b",
-            "n_both",
-            F.round(
-                F.log2(
-                    F.col("n_both") * F.col("n_docs")
-                    / (F.col("n_a") * F.col("n_b"))
-                ),
-                6,
-            ).alias("pmi"),
-        )
-        .sortWithinPartitions("tok_a", "tok_b")
-    )
-
-
-TOKEN_PMI_SQL = r"""
-WITH dt AS (
-    SELECT DISTINCT doc_id, t AS tok FROM (
-        SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text), '[^\w'']+'),
-                                  x -> x != '')) AS t
-        FROM documents
-    )
-), n AS (SELECT COUNT(*) AS n_docs FROM documents),
-singles AS (SELECT tok, COUNT(*) AS n_tok FROM dt GROUP BY tok),
-pairs AS (
-    SELECT a.tok AS tok_a, b.tok AS tok_b, COUNT(*) AS n_both
-    FROM dt a JOIN dt b ON a.doc_id = b.doc_id AND a.tok < b.tok
-    GROUP BY tok_a, tok_b
-    HAVING COUNT(*) >= 5
-)
-SELECT tok_a, tok_b, n_both,
-       ROUND(log2(CAST(n_both AS DOUBLE) * n_docs / (sa.n_tok * sb.n_tok)), 6)
-           AS pmi
-FROM pairs
-JOIN singles sa ON sa.tok = tok_a
-JOIN singles sb ON sb.tok = tok_b
-CROSS JOIN n
-ORDER BY tok_a, tok_b
-"""
-
-
-# ---------------------------------------------------------------------------
 # Quantile discretization (equal-frequency binning): assign each row
 # its price decile — the ML feature-prep transform. Binning follows a
 # TOTAL order (price, orderkey, linenumber) so assignment is
@@ -1095,25 +877,988 @@ ORDER BY decile
 """
 
 
-STATS_QUERIES = {
-    "price_discount_corr": (price_discount_corr, PRICE_DISCOUNT_CORR_SQL),
-    "price_histogram": (price_histogram, PRICE_HISTOGRAM_SQL),
-    "hll_events_rollup": (hll_events_rollup, HLL_EVENTS_SQL),
-    "token_heavy_hitters": (token_heavy_hitters, TOKEN_HEAVY_HITTERS_SQL),
-    "embedding_pca_project": (embedding_pca_project, None),
-    "pca_check": (pca_check, PCA_CHECK_SQL),
-    "value_outliers_iqr": (value_outliers_iqr, VALUE_OUTLIERS_SQL),
-    "priority_status_dependence": (priority_status_dependence, PRIORITY_STATUS_DEP_SQL),
-    "suppkey_skew_report": (suppkey_skew_report, SUPPKEY_SKEW_SQL),
-    "winsorized_price_stats": (winsorized_price_stats, WINSORIZED_PRICE_SQL),
-    "token_zipf_fit": (token_zipf_fit, TOKEN_ZIPF_SQL),
-    "token_pmi_pairs": (token_pmi_pairs, TOKEN_PMI_SQL),
-    "price_decile_profile": (price_decile_profile, PRICE_DECILE_SQL),
-    "fulfillment_latency_quantiles": (
-        fulfillment_latency_quantiles,
-        FULFILLMENT_LATENCY_SQL,
-    ),
-    "user_value_trend": (user_value_trend, USER_VALUE_TREND_SQL),
-    "value_bootstrap_ci": (value_bootstrap_ci, VALUE_BOOTSTRAP_SQL),
-    "embedding_model_scores": (embedding_model_scores, EMBEDDING_SCORES_SQL),
-}
+# ---------------------------------------------------------------------------
+# Robust outlier detection: median / MAD (median absolute deviation)
+# per event_type — the heavy-tail-safe complement of the IQR and
+# z-score families (one wild value moves a mean/stddev fence, not a
+# MAD fence). Cross-engine exactness: both medians are LOWER medians
+# — the k = ⌊(n+1)/2⌋-th ORDER STATISTIC, an element of the data, so
+# no interpolation (the engines' percentile interpolation is not
+# bit-compatible — the rolling_median_values lesson); |x−med|,
+# 3·mad, and the comparison are identical IEEE ops on identical
+# doubles. Scale shape: two sort-within-type window passes plus
+# per-type median tables AQE is free to broadcast (one row per
+# distinct event_type — not bounded by construction, so no hint) — the per-type sort is the
+# honest cost of an exact order statistic at scale (approximate
+# alternatives live in approx_quantiles_lineitem / the KLL gate).
+# ---------------------------------------------------------------------------
+
+
+def value_mad_outliers(spark: SparkSession, sf: str) -> DataFrame:
+    ev = load_events(spark, sf).select("event_type", "event_id", "value")
+    by_val = Window.partitionBy("event_type").orderBy("value", "event_id")
+    n_w = Window.partitionBy("event_type")
+    k = F.floor((F.count(F.lit(1)).over(n_w) + 1) / 2)
+    med = (
+        ev.withColumn("rn", F.row_number().over(by_val))
+        .withColumn("k", k)
+        .filter(F.col("rn") == F.col("k"))
+        .select("event_type", F.col("value").alias("med"))
+    )
+    dev = ev.join(med, "event_type").withColumn(
+        "d", F.abs(F.col("value") - F.col("med"))
+    )
+    by_dev = Window.partitionBy("event_type").orderBy("d", "event_id")
+    mad = (
+        dev.withColumn("rn", F.row_number().over(by_dev))
+        .withColumn("k", k)
+        .filter(F.col("rn") == F.col("k"))
+        .select("event_type", F.col("d").alias("mad"))
+    )
+    return (
+        dev.join(mad, "event_type")
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.first("med").alias("med"),
+            F.first("mad").alias("mad"),
+            F.sum(
+                (F.col("d") > F.lit(3.0) * F.col("mad")).cast("int")
+            ).alias("n_outliers"),
+        )
+        .orderBy("event_type")
+    )
+
+
+VALUE_MAD_SQL = """
+WITH ev AS (
+  SELECT event_type, event_id, value FROM events
+),
+ranked AS (
+  SELECT event_type, value,
+         ROW_NUMBER() OVER (PARTITION BY event_type
+                            ORDER BY value, event_id) AS rn,
+         CAST(FLOOR((COUNT(*) OVER (PARTITION BY event_type) + 1) / 2)
+              AS BIGINT) AS k
+  FROM ev
+),
+med AS (SELECT event_type, value AS med FROM ranked WHERE rn = k),
+dev AS (
+  SELECT e.event_type, e.event_id, e.value, m.med,
+         ABS(e.value - m.med) AS d
+  FROM ev e JOIN med m USING (event_type)
+),
+dranked AS (
+  SELECT event_type, d,
+         ROW_NUMBER() OVER (PARTITION BY event_type
+                            ORDER BY d, event_id) AS rn,
+         CAST(FLOOR((COUNT(*) OVER (PARTITION BY event_type) + 1) / 2)
+              AS BIGINT) AS k
+  FROM dev
+),
+mad AS (SELECT event_type, d AS mad FROM dranked WHERE rn = k)
+SELECT v.event_type, COUNT(*) AS n,
+       ANY_VALUE(v.med) AS med, ANY_VALUE(a.mad) AS mad,
+       CAST(SUM(CASE WHEN v.d > 3.0 * a.mad THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_outliers
+FROM dev v JOIN mad a USING (event_type)
+GROUP BY v.event_type ORDER BY v.event_type
+"""
+
+
+# ---------------------------------------------------------------------------
+# Model-evaluation ops over the scored embeddings — the metrics a
+# training pipeline computes at data scale (score a 100 TB eval set,
+# aggregate; no driver-side sklearn). Both reuse the fixed sigmoid
+# scorer columns.py::sigmoid_score (bit-exactness
+# precedent: fixed-order fold + identical double literals) against
+# the synthetic binary target label >= 5.
+#
+# Exactness: per-row scores round to 6 dp before the exact decimal
+# sum (charlm discipline); counts are integers; every ratio divides
+# once and rounds to 6. The PR sweep crossJoins a 9-row literal
+# threshold frame (bounded by construction — broadcast is free
+# either way, AQE handles it).
+# ---------------------------------------------------------------------------
+
+
+def score_calibration_bins(spark: SparkSession, sf: str) -> DataFrame:
+    """Reliability diagram input: per score decile, the mean
+    predicted probability vs the observed positive rate — a
+    calibrated model tracks the diagonal. One scan, one 10-group
+    aggregate."""
+    emb = load_table(spark, sf, "embeddings")
+    s = emb.select(
+        F.floor(sigmoid_score() * 10).cast("int").alias("bin"),
+        F.round(sigmoid_score(), 6).alias("score"),
+        (F.col("label") >= 5).cast("int").alias("pos"),
+    )
+    return (
+        s.groupBy("bin")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.round(
+                dec_sum(F.col("score"), 6).cast("double") / F.count(F.lit(1)), 6
+            ).alias("mean_score"),
+            F.round(F.sum("pos") / F.count(F.lit(1)), 6).alias("pos_rate"),
+        )
+        .orderBy("bin")
+    )
+
+
+SCORE_CALIBRATION_SQL = f"""
+WITH s AS (
+  SELECT CAST(FLOOR({SIGMOID_SCORE_SQL} * 10) AS INT) AS bin,
+         ROUND({SIGMOID_SCORE_SQL}, 6) AS score,
+         CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
+  FROM embeddings
+)
+SELECT bin, COUNT(*) AS n,
+       ROUND(CAST(SUM(CAST(score AS DECIMAL(30,6))) AS DOUBLE) / COUNT(*), 6)
+         AS mean_score,
+       ROUND(CAST(SUM(pos) AS DOUBLE) / COUNT(*), 6) AS pos_rate
+FROM s GROUP BY bin ORDER BY bin
+"""
+
+
+def score_pr_curve(spark: SparkSession, sf: str) -> DataFrame:
+    """Precision/recall at nine thresholds (0.1 … 0.9) in one
+    conditional aggregation — the threshold frame is a 9-row literal,
+    so the sweep costs one scan regardless of corpus size."""
+    emb = load_table(spark, sf, "embeddings")
+    s = emb.select(
+        sigmoid_score().alias("score"),
+        (F.col("label") >= 5).cast("int").alias("pos"),
+    )
+    thresholds = spark.createDataFrame(
+        [(i, float(repr(i / 10))) for i in range(1, 10)], ["ti", "t"]
+    )
+    agg = (
+        # hint the 9-row literal frame (bounded by construction):
+        # unhinted, AQE broadcast the CORPUS side at test SF — the
+        # reversed build side a 100 TB eval set cannot survive
+        s.crossJoin(F.broadcast(thresholds))
+        .groupBy("ti", "t")
+        .agg(
+            F.sum(
+                ((F.col("score") >= F.col("t")) & (F.col("pos") == 1)).cast("long")
+            ).alias("tp"),
+            F.sum(
+                ((F.col("score") >= F.col("t")) & (F.col("pos") == 0)).cast("long")
+            ).alias("fp"),
+            F.sum(
+                ((F.col("score") < F.col("t")) & (F.col("pos") == 1)).cast("long")
+            ).alias("fn"),
+        )
+    )
+    return agg.select(
+        F.col("ti").cast("int").alias("ti"),
+        F.round("t", 1).alias("threshold"),
+        "tp",
+        "fp",
+        "fn",
+        F.when(
+            F.col("tp") + F.col("fp") > 0,
+            F.round(F.col("tp") / (F.col("tp") + F.col("fp")), 6),
+        ).alias("precision"),
+        F.when(
+            F.col("tp") + F.col("fn") > 0,
+            F.round(F.col("tp") / (F.col("tp") + F.col("fn")), 6),
+        ).alias("recall"),
+    ).orderBy("ti")
+
+
+SCORE_PR_SQL = f"""
+WITH s AS (
+  SELECT {SIGMOID_SCORE_SQL} AS score,
+         CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
+  FROM embeddings
+),
+t AS (SELECT CAST(i AS INT) AS ti, i / 10.0 AS t
+      FROM UNNEST(range(1, 10)) AS u(i)),
+agg AS (
+  SELECT ti, t,
+         SUM(CASE WHEN score >= t AND pos = 1 THEN 1 ELSE 0 END) AS tp,
+         SUM(CASE WHEN score >= t AND pos = 0 THEN 1 ELSE 0 END) AS fp,
+         SUM(CASE WHEN score <  t AND pos = 1 THEN 1 ELSE 0 END) AS fn
+  FROM s, t GROUP BY ti, t
+)
+SELECT ti, ROUND(t, 1) AS threshold,
+       CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
+       CAST(fn AS BIGINT) AS fn,
+       CASE WHEN tp + fp > 0
+            THEN ROUND(CAST(tp AS DOUBLE) / (tp + fp), 6) END AS precision,
+       CASE WHEN tp + fn > 0
+            THEN ROUND(CAST(tp AS DOUBLE) / (tp + fn), 6) END AS recall
+FROM agg ORDER BY ti
+"""
+
+
+def score_auc(spark: SparkSession, sf: str) -> DataFrame:
+    """Exact ROC-AUC as the Mann–Whitney U rank statistic:
+    AUC = (Σ midrank(positives) − n₊(n₊+1)/2) / (n₊·n₋), with
+    midranks (RANK + (ties−1)/2) handling equal scores exactly — the
+    textbook identity, no curve integration, no thresholds. Midranks
+    are exact .0/.5 doubles, so the decimal sum is lossless and the
+    single division rounds once.
+
+    The global rank is computed WITHOUT a single-partition window
+    (the value_drift_ks decomposition): fixed-width score buckets
+    from a 1-row bounds broadcast, parallel in-bucket RANK windows,
+    and a ≤256-row cross-bucket prefix table. Equal scores land in
+    the same bucket (the bucket is a function of the score), so ties
+    never span buckets and global RANK = bucket prefix + in-bucket
+    RANK exactly; the tie count is a parallel per-score window. The
+    DuckDB twin ranks with a plain global window — the hash match
+    proves the decomposition."""
+    emb = load_table(spark, sf, "embeddings")
+    s = emb.select(
+        sigmoid_score().alias("score"),
+        (F.col("label") >= 5).cast("int").alias("pos"),
+    )
+    bounds = s.agg(F.min("score").alias("s0"), F.max("score").alias("s1"))
+    b = (
+        s.crossJoin(F.broadcast(bounds))  # 1-row side
+        .select(
+            "score", "pos",
+            F.least(
+                F.floor(
+                    (F.col("score") - F.col("s0"))
+                    / F.greatest(
+                        (F.col("s1") - F.col("s0")) / F.lit(256.0),
+                        F.lit(1e-300),
+                    )
+                ).cast("int"),
+                F.lit(255),
+            ).alias("bucket"),
+        )
+    )
+    in_bucket = Window.partitionBy("bucket").orderBy("score")
+    prefix_w = (
+        Window.partitionBy(constant_partition_key("bucket"))
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    prefix = (
+        b.groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("bn"))
+        .select(
+            "bucket",
+            F.coalesce(F.sum("bn").over(prefix_w), F.lit(0)).alias("pfx"),
+        )
+    )
+    ranked = (
+        b.withColumn("r_in", F.rank().over(in_bucket))
+        .withColumn(
+            "ties", F.count(F.lit(1)).over(Window.partitionBy("score"))
+        )
+        .join(F.broadcast(prefix), "bucket")
+        .select(
+            "pos",
+            (
+                F.col("pfx") + F.col("r_in") + (F.col("ties") - 1) / 2.0
+            ).alias("midrank"),
+        )
+    )
+    return ranked.agg(
+        F.sum("pos").alias("n_pos"),
+        F.sum(1 - F.col("pos")).alias("n_neg"),
+        F.round(
+            (
+                dec_sum(F.when(F.col("pos") == 1, F.col("midrank")), 6).cast(
+                    "double"
+                )
+                - (F.sum("pos") * (F.sum("pos") + 1)) / 2.0
+            )
+            / (F.sum("pos") * F.sum(1 - F.col("pos"))),
+            6,
+        ).alias("auc"),
+    )
+
+
+SCORE_AUC_SQL = f"""
+WITH s AS (
+  SELECT {SIGMOID_SCORE_SQL} AS score,
+         CASE WHEN label >= 5 THEN 1 ELSE 0 END AS pos
+  FROM embeddings
+),
+r AS (
+  SELECT pos,
+         RANK() OVER (ORDER BY score)
+         + (COUNT(*) OVER (PARTITION BY score) - 1) / 2.0 AS midrank
+  FROM s
+)
+SELECT CAST(SUM(pos) AS BIGINT) AS n_pos,
+       CAST(SUM(1 - pos) AS BIGINT) AS n_neg,
+       ROUND((CAST(SUM(CASE WHEN pos = 1
+                            THEN CAST(midrank AS DECIMAL(30,6)) END)
+                   AS DOUBLE)
+              - (SUM(pos) * (SUM(pos) + 1)) / 2.0)
+             / (SUM(pos) * SUM(1 - pos)), 6) AS auc
+FROM r
+"""
+
+
+# ---------------------------------------------------------------------------
+# Exact two-sample Kolmogorov–Smirnov drift statistic between the
+# event stream's time halves — the distribution-free complement of
+# value_drift_psi (PSI needs binning; KS is exact on the raw
+# values): D = max over distinct values of |ECDF_early − ECDF_late|.
+#
+# Scale-correct exact ECDF (no single-partition global window): a
+# 1-row bounds broadcast assigns each distinct value a fixed-width
+# BUCKET; cumulative counts run in parallel windows WITHIN each
+# bucket, and the cross-bucket prefix comes from a ≤256-row bucket
+# total table (bounded by construction → broadcast). The oracle
+# computes the same ECDFs with a plain cumulative window — identical
+# values, so the hash compare proves the parallel decomposition.
+# Precondition (holds for the event corpus): both halves non-empty.
+# ---------------------------------------------------------------------------
+
+
+def value_drift_ks(spark: SparkSession, sf: str) -> DataFrame:
+    e = load_events(spark, sf).select("ts_sec", F.col("value").cast("double"))
+    bounds = e.agg(
+        F.min("ts_sec").alias("t0"), F.max("ts_sec").alias("t1"),
+        F.min("value").alias("v0"), F.max("value").alias("v1"),
+    )
+    g = (
+        e.crossJoin(F.broadcast(bounds))  # 1-row side
+        .select(
+            "value",
+            # same constant-column guard as value_drift_psi
+            F.least(
+                F.floor(
+                    (F.col("value") - F.col("v0"))
+                    / F.greatest(
+                        (F.col("v1") - F.col("v0")) / F.lit(256.0),
+                        F.lit(1e-300),
+                    )
+                ).cast("int"),
+                F.lit(255),
+            ).alias("bucket"),
+            (F.col("ts_sec") * 2 < F.col("t0") + F.col("t1")).alias("early"),
+        )
+        .groupBy("bucket", "value")
+        .agg(
+            F.sum(F.when(F.col("early"), 1).otherwise(0)).alias("ne"),
+            F.sum(F.when(F.col("early"), 0).otherwise(1)).alias("nl"),
+        )
+    )
+    in_bucket = Window.partitionBy("bucket").orderBy("value")
+    g = g.select(
+        "bucket", "value",
+        F.sum("ne").over(in_bucket).alias("ce_in"),
+        F.sum("nl").over(in_bucket).alias("cl_in"),
+    )
+    # ≤256-row prefix table: totals per bucket, cumulated over the
+    # bucket ids (a window over a bounded relation), EXCLUSIVE prefix
+    btot = (
+        g.groupBy("bucket")
+        .agg(F.max("ce_in").alias("be"), F.max("cl_in").alias("bl"))
+    )
+    over_buckets = (
+        Window.partitionBy(constant_partition_key("bucket"))
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    prefix = btot.select(
+        "bucket",
+        F.coalesce(F.sum("be").over(over_buckets), F.lit(0)).alias("pe"),
+        F.coalesce(F.sum("bl").over(over_buckets), F.lit(0)).alias("pl"),
+    )
+    cum = g.join(F.broadcast(prefix), "bucket").select(
+        (F.col("ce_in") + F.col("pe")).alias("ce"),
+        (F.col("cl_in") + F.col("pl")).alias("cl"),
+    )
+    tot = cum.agg(F.max("ce").alias("te"), F.max("cl").alias("tl"))
+    return (
+        cum.crossJoin(F.broadcast(tot))  # 1-row side
+        .agg(
+            F.max("te").alias("n_early"),
+            F.max("tl").alias("n_late"),
+            F.round(
+                F.max(
+                    F.abs(
+                        F.col("ce") / F.col("te") - F.col("cl") / F.col("tl")
+                    )
+                ),
+                6,
+            ).alias("ks_stat"),
+        )
+    )
+
+
+VALUE_DRIFT_KS_SQL = """
+WITH e AS (
+  SELECT CAST(floor(epoch(ts)) AS BIGINT) AS ts_sec,
+         CAST(value AS DOUBLE) AS value
+  FROM events
+),
+b AS (SELECT MIN(ts_sec) AS t0, MAX(ts_sec) AS t1 FROM e),
+g AS (
+  SELECT value,
+         SUM(CASE WHEN e.ts_sec * 2 < b.t0 + b.t1 THEN 1 ELSE 0 END) AS ne,
+         SUM(CASE WHEN e.ts_sec * 2 < b.t0 + b.t1 THEN 0 ELSE 1 END) AS nl
+  FROM e, b GROUP BY value
+),
+c AS (
+  SELECT SUM(ne) OVER (ORDER BY value) AS ce,
+         SUM(nl) OVER (ORDER BY value) AS cl
+  FROM g
+),
+t AS (SELECT MAX(ce) AS te, MAX(cl) AS tl FROM c)
+SELECT CAST(MAX(t.te) AS BIGINT) AS n_early,
+       CAST(MAX(t.tl) AS BIGINT) AS n_late,
+       ROUND(MAX(ABS(CAST(c.ce AS DOUBLE) / t.te
+                     - CAST(c.cl AS DOUBLE) / t.tl)), 6) AS ks_stat
+FROM c, t
+"""
+
+
+# ---------------------------------------------------------------------------
+# Gini coefficient of customer spend concentration: with customers'
+# total spends x₍₁₎ ≤ … ≤ x₍ₙ₎ (ties broken by custkey so the order
+# is total), G = 2·Σᵢ i·x₍ᵢ₎ / (n·Σx) − (n+1)/n — the exact
+# rank-sum identity, no curve integration.
+#
+# The global row_number avoids a single-partition window via the
+# score_auc bucket decomposition: 256 fixed-width spend buckets from
+# a 1-row bounds broadcast, parallel in-bucket ROW_NUMBER windows,
+# and a ≤256-row broadcast prefix table (the bucket is a function of
+# the spend alone, and (spend, custkey) never orders across buckets
+# out of bucket order). The DuckDB twin uses a plain global window —
+# the hash match proves the decomposition.
+#
+# Exactness: per-customer spend is a DECIMAL(30,2) sum of
+# two-decimal prices (lossless); i·x is an int×decimal product
+# summed as DECIMAL(38,2) (lossless: i ≤ n, far under the precision
+# cap); the Gini arithmetic is the same fixed sequence of IEEE
+# double ops on both engines, rounded once.
+# ---------------------------------------------------------------------------
+
+
+def spend_gini_frame(orders: DataFrame) -> DataFrame:
+    spend = orders.groupBy("o_custkey").agg(
+        F.sum(F.col("o_totalprice").cast("decimal(30,2)")).alias("spend")
+    )
+    bounds = spend.agg(
+        F.min("spend").cast("double").alias("s0"),
+        F.max("spend").cast("double").alias("s1"),
+    )
+    b = spend.crossJoin(F.broadcast(bounds)).select(  # 1-row side
+        "o_custkey",
+        "spend",
+        F.least(
+            F.floor(
+                (F.col("spend").cast("double") - F.col("s0"))
+                / F.greatest(
+                    (F.col("s1") - F.col("s0")) / F.lit(256.0),
+                    F.lit(1e-300),
+                )
+            ).cast("int"),
+            F.lit(255),
+        ).alias("bucket"),
+    )
+    in_bucket = Window.partitionBy("bucket").orderBy("spend", "o_custkey")
+    prefix_w = (
+        Window.partitionBy(constant_partition_key("bucket"))
+        .orderBy("bucket")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    prefix = (
+        b.groupBy("bucket")
+        .agg(F.count(F.lit(1)).alias("bn"))
+        .select(
+            "bucket",
+            F.coalesce(F.sum("bn").over(prefix_w), F.lit(0)).alias("pfx"),
+        )
+    )
+    ranked = (
+        b.withColumn("r_in", F.row_number().over(in_bucket))
+        .join(F.broadcast(prefix), "bucket")
+        .select(
+            "spend", (F.col("pfx") + F.col("r_in")).alias("i")
+        )
+    )
+    return ranked.agg(
+        F.count(F.lit(1)).alias("n_customers"),
+        F.round(F.sum("spend").cast("double"), 2).alias("total_spend"),
+        F.round(
+            2.0
+            * F.sum(
+                (F.col("i").cast("decimal(18,0)") * F.col("spend")).cast(
+                    "decimal(38,2)"
+                )
+            ).cast("double")
+            / (
+                F.count(F.lit(1)).cast("double")
+                * F.sum("spend").cast("double")
+            )
+            - (F.count(F.lit(1)) + 1.0) / F.count(F.lit(1)),
+            6,
+        ).alias("gini"),
+    )
+
+
+def customer_spend_gini(spark: SparkSession, sf: str) -> DataFrame:
+    return spend_gini_frame(load_table(spark, sf, "orders"))
+
+
+GINI_SQL = """
+WITH spend AS (
+    SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(30,2))) AS spend
+    FROM orders GROUP BY o_custkey
+), ranked AS (
+    SELECT spend,
+           ROW_NUMBER() OVER (ORDER BY spend, o_custkey) AS i
+    FROM spend
+)
+SELECT CAST(COUNT(*) AS BIGINT) AS n_customers,
+       ROUND(CAST(SUM(spend) AS DOUBLE), 2) AS total_spend,
+       ROUND(2.0 * CAST(SUM(CAST(CAST(i AS DECIMAL(18,0)) * spend
+                                 AS DECIMAL(38,2))) AS DOUBLE)
+             / (CAST(COUNT(*) AS DOUBLE) * CAST(SUM(spend) AS DOUBLE))
+             - (COUNT(*) + 1.0) / COUNT(*), 6) AS gini
+FROM ranked
+"""
+
+
+# ---------------------------------------------------------------------------
+# Benford first-significant-digit audit of order totals — the
+# fabricated-data screen (Nigrini '12): real multiplicative amounts
+# follow P(d) = log10(1 + 1/d); uniform or hand-picked ones don't.
+#
+# The digit is extracted WITHOUT runtime logarithms: totals have two
+# decimals, so cents = CAST(ROUND(x·100) AS BIGINT) is exact, and
+# the first character of the integer's decimal string is the first
+# significant digit (integer→string is exact on both engines —
+# no float formatting, no log10 that could land on a power of 10
+# and floor differently per engine). Expected shares are Python
+# log10 literals embedded identically in BOTH plans.
+#
+# Scale: one scan → 9-row aggregate; the totals join is a 1-row
+# broadcast.
+# ---------------------------------------------------------------------------
+
+_BENFORD = {d: math.log10(1.0 + 1.0 / d) for d in range(1, 10)}
+
+
+def benford_frame(orders: DataFrame) -> DataFrame:
+    digit = F.substring(
+        F.round(F.col("o_totalprice") * 100).cast("long").cast("string"),
+        1,
+        1,
+    ).cast("int")
+    per = (
+        orders.filter(F.col("o_totalprice") > 0)
+        .select(digit.alias("digit"))
+        .groupBy("digit")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    tot = per.agg(F.sum("n").alias("total"))
+    expected = F.lit(0.0)
+    for d, p in _BENFORD.items():
+        expected = F.when(F.col("digit") == d, F.lit(p)).otherwise(expected)
+    return (
+        per.crossJoin(F.broadcast(tot))  # 1-row side
+        .select(
+            "digit",
+            F.col("n").cast("long").alias("n"),
+            F.round(F.col("n") / F.col("total"), 6).alias("share"),
+            F.round(expected, 6).alias("benford"),
+            F.round(
+                F.round(F.col("n") / F.col("total"), 6) - F.round(expected, 6),
+                6,
+            ).alias("excess"),
+        )
+        .orderBy("digit")
+    )
+
+
+def benford_order_totals(spark: SparkSession, sf: str) -> DataFrame:
+    return benford_frame(load_table(spark, sf, "orders"))
+
+
+# DuckDB parses bare decimal literals as DECIMAL — cast each arm so
+# the arithmetic stays in doubles like the Spark side
+_BENFORD_CASE = "CASE digit " + " ".join(
+    f"WHEN {d} THEN CAST({p!r} AS DOUBLE)" for d, p in _BENFORD.items()
+) + " ELSE CAST(0.0 AS DOUBLE) END"
+
+
+BENFORD_SQL = f"""
+WITH per AS (
+    SELECT CAST(substr(CAST(CAST(ROUND(o_totalprice * 100) AS BIGINT)
+                            AS VARCHAR), 1, 1) AS INT) AS digit,
+           COUNT(*) AS n
+    FROM orders WHERE o_totalprice > 0
+    GROUP BY 1
+), tot AS (
+    SELECT SUM(n) AS total FROM per
+)
+SELECT digit, CAST(n AS BIGINT) AS n,
+       ROUND(CAST(n AS DOUBLE) / total, 6) AS share,
+       ROUND({_BENFORD_CASE}, 6) AS benford,
+       ROUND(ROUND(CAST(n AS DOUBLE) / total, 6)
+             - ROUND({_BENFORD_CASE}, 6), 6) AS excess
+FROM per CROSS JOIN tot
+ORDER BY digit
+"""
+
+
+# ---------------------------------------------------------------------------
+# Exact p95 per event type: the k-th order statistic with
+# k = ⌈0.95·n⌉ = (19n + 19) DIV 20 — an ELEMENT of the data (the
+# odd-window median discipline: order statistics are engine-exact,
+# interpolated quantiles are not). The global per-type rank comes
+# from the parallel_row_number bucket decomposition; the plain-window
+# DuckDB twin proves it per round.
+# ---------------------------------------------------------------------------
+
+
+def value_p95_by_type(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.ranks import parallel_row_number
+
+    e = load_events(spark, sf).select("event_type", "value", "event_id")
+    ranked = parallel_row_number(
+        e, "value", ["event_id"], part_cols=["event_type"], out_col="i"
+    )
+    n = e.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    return (
+        ranked.join(n, "event_type")
+        .filter(F.col("i") == F.expr("(19 * n + 19) DIV 20"))
+        .select(
+            "event_type",
+            F.col("n").cast("long").alias("n"),
+            F.round(F.col("value"), 6).alias("p95"),
+        )
+        .orderBy("event_type")
+    )
+
+
+P95_SQL = """
+WITH ranked AS (
+    SELECT event_type, value,
+           ROW_NUMBER() OVER (PARTITION BY event_type
+                              ORDER BY value, event_id) AS i,
+           COUNT(*) OVER (PARTITION BY event_type) AS n
+    FROM events
+)
+SELECT event_type, CAST(n AS BIGINT) AS n, ROUND(value, 6) AS p95
+FROM ranked WHERE i = (19 * n + 19) // 20
+ORDER BY event_type
+"""
+
+
+# ---------------------------------------------------------------------------
+# Revenue Pareto point: the smallest k such that the top-k customers
+# (by spend, ties broken by custkey) cover ≥ 80% of total revenue.
+# Customers rank DESCENDING via the parallel prefix-sum ordered on
+# the NEGATED spend (the bucket function must be monotone in the
+# order key); the cumulative spend is exact decimal, so the ≥-80%
+# crossing row is engine-exact: it is the FIRST row where
+# 100·cum ≥ 80·total — pure decimal/integer comparisons, no float
+# share ever computed before the final rounded output columns.
+# ---------------------------------------------------------------------------
+
+
+def revenue_pareto_8020(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.ranks import parallel_prefix_sum
+
+    spend = (
+        load_table(spark, sf, "orders")
+        .groupBy("o_custkey")
+        .agg(
+            F.sum(F.col("o_totalprice").cast("decimal(30,2)")).alias("spend")
+        )
+        .withColumn("neg", -F.col("spend").cast("double"))
+    )
+    cum = parallel_prefix_sum(
+        spend, "spend", "neg", ["o_custkey"], scale=2, out_col="cum"
+    )
+    totals = spend.agg(
+        F.sum("spend").alias("total"),
+        F.count(F.lit(1)).alias("n_customers"),
+    )
+    crossed = (
+        cum.crossJoin(F.broadcast(totals))  # 1-row side
+        .filter(F.col("cum") * 100 >= F.col("total") * 80)
+        .agg(
+            F.min(
+                F.struct(
+                    (-F.col("spend")).alias("neg"), "o_custkey", "cum",
+                    "total", "n_customers",
+                )
+            ).alias("s")
+        )
+    )
+    # the first crossing row is the MIN in descending-spend order —
+    # recovered via a struct-min so no second global sort is needed
+    k = (
+        cum.crossJoin(F.broadcast(totals))
+        .filter(F.col("cum") * 100 < F.col("total") * 80)
+        .agg(F.count(F.lit(1)).alias("below"))
+    )
+    return (
+        k.crossJoin(F.broadcast(crossed))
+        .select(
+            (F.col("below") + 1).cast("long").alias("k_customers"),
+            F.col("s.n_customers").cast("long").alias("n_customers"),
+            F.round(
+                F.col("s.cum").cast("double") / F.col("s.total").cast("double"),
+                6,
+            ).alias("share_at_k"),
+            F.round(
+                (F.col("below") + 1) / F.col("s.n_customers"), 6
+            ).alias("k_fraction"),
+        )
+    )
+
+
+PARETO_SQL = """
+WITH spend AS (
+    SELECT o_custkey, SUM(CAST(o_totalprice AS DECIMAL(30,2))) AS spend
+    FROM orders GROUP BY o_custkey
+), cum AS (
+    SELECT o_custkey, spend,
+           SUM(spend) OVER (ORDER BY spend DESC, o_custkey
+                            ROWS UNBOUNDED PRECEDING) AS cum
+    FROM spend
+), totals AS (
+    SELECT SUM(spend) AS total, COUNT(*) AS n_customers FROM spend
+), crossing AS (
+    SELECT cum FROM cum CROSS JOIN totals
+    WHERE cum * 100 >= total * 80
+    ORDER BY spend DESC, o_custkey LIMIT 1
+), below AS (
+    SELECT COUNT(*) AS below FROM cum CROSS JOIN totals
+    WHERE cum * 100 < total * 80
+)
+SELECT CAST(below + 1 AS BIGINT) AS k_customers,
+       CAST(n_customers AS BIGINT) AS n_customers,
+       ROUND(CAST(crossing.cum AS DOUBLE) / CAST(total AS DOUBLE), 6)
+           AS share_at_k,
+       ROUND(CAST(below + 1 AS DOUBLE) / n_customers, 6) AS k_fraction
+FROM below CROSS JOIN crossing CROSS JOIN totals
+"""
+
+
+# ---------------------------------------------------------------------------
+# Quantity-weighted median line price: the smallest price p (ties on
+# the synthetic row order) such that the cumulative quantity through
+# p reaches half the total — the first row where 2·cum ≥ W. Both the
+# cumulative and total weights are exact decimal sums of integer
+# quantities, so the crossing row is engine-exact. The prefix sum
+# runs on the parallel bucket decomposition; the oracle is a plain
+# cumulative window.
+# ---------------------------------------------------------------------------
+
+
+def weighted_median_price(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.ranks import parallel_prefix_sum
+
+    li = load_table(spark, sf, "lineitem").select(
+        "l_orderkey",
+        "l_linenumber",
+        F.col("l_extendedprice").alias("price"),
+        F.col("l_quantity").alias("qty"),
+    )
+    cum = parallel_prefix_sum(
+        li, "qty", "price", ["l_orderkey", "l_linenumber"],
+        scale=2, out_col="cum",
+    )
+    w = li.agg(F.sum(F.col("qty").cast("decimal(30,2)")).alias("wtot"))
+    return (
+        cum.crossJoin(F.broadcast(w))  # 1-row side
+        .filter(F.col("cum") * 2 >= F.col("wtot"))
+        .agg(
+            F.min(
+                F.struct("price", "l_orderkey", "l_linenumber", "wtot")
+            ).alias("s")
+        )
+        .select(
+            F.round(F.col("s.price"), 2).alias("weighted_median_price"),
+            F.round(F.col("s.wtot").cast("double"), 2).alias("total_qty"),
+        )
+    )
+
+
+WEIGHTED_MEDIAN_SQL = """
+WITH li AS (
+    SELECT l_orderkey, l_linenumber, l_extendedprice AS price,
+           l_quantity AS qty
+    FROM lineitem
+), cum AS (
+    SELECT price, l_orderkey, l_linenumber,
+           SUM(CAST(qty AS DECIMAL(30,2)))
+               OVER (ORDER BY price, l_orderkey, l_linenumber
+                     ROWS UNBOUNDED PRECEDING) AS cum
+    FROM li
+), w AS (
+    SELECT SUM(CAST(qty AS DECIMAL(30,2))) AS wtot FROM li
+), crossing AS (
+    SELECT price FROM cum CROSS JOIN w
+    WHERE cum * 2 >= wtot
+    ORDER BY price, l_orderkey, l_linenumber LIMIT 1
+)
+SELECT ROUND(crossing.price, 2) AS weighted_median_price,
+       ROUND(CAST(w.wtot AS DOUBLE), 2) AS total_qty
+FROM crossing CROSS JOIN w
+"""
+
+
+# ---------------------------------------------------------------------------
+# Exact interpolated quartiles. With n rows sorted ascending, the
+# p/4 quantile sits at h = (n−1)·p/4: lo = 1 + (n−1)·p DIV 4 (1-based),
+# hi = lo+1 when the fractional part f = ((n−1)·p) % 4 quarters is
+# non-zero. value = (x_lo·(4−f) + x_hi·f) / 4 — the numerator is an
+# exact DECIMAL combination, and /4 is performed in DOUBLE (exact:
+# power of two) — so both engines produce the identical bit pattern
+# with no rounding discipline needed beyond the final display round.
+# The rank pass is bucket-parallel; ties need no tiebreak because
+# only (i, value) pairs are read and the sorted multiset is unique.
+# ---------------------------------------------------------------------------
+
+
+def price_quartiles_exact(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.ranks import parallel_row_number
+
+    li = load_table(spark, sf, "lineitem").select("l_extendedprice")
+    ranked = parallel_row_number(
+        li, "l_extendedprice", [], out_col="i"
+    ).localCheckpoint()  # feeds the lo-join AND the hi-join
+    n = li.agg(F.count(F.lit(1)).alias("n"))
+    pos = (
+        spark.range(1, 4)
+        .select(F.col("id").alias("p"))
+        .crossJoin(F.broadcast(n))  # 1-row side
+        .select(
+            "p",
+            (F.lit(1) + F.expr("((n - 1) * p) DIV 4")).alias("lo"),
+            F.expr("((n - 1) * p) % 4").alias("f"),
+        )
+        .select(
+            "p", "lo", "f",
+            F.when(F.col("f") > 0, F.col("lo") + 1)
+            .otherwise(F.col("lo"))
+            .alias("hi"),
+        )
+    )
+    xlo = ranked.join(F.broadcast(pos), ranked.i == pos.lo).select(
+        "p", "f", F.col("l_extendedprice").alias("xlo")
+    )
+    xhi = ranked.join(
+        F.broadcast(pos.select("p", "hi")), ranked.i == F.col("hi")
+    ).select("p", F.col("l_extendedprice").alias("xhi"))
+    return (
+        xlo.join(F.broadcast(xhi), "p")  # 3 rows by construction
+        .select(
+            F.col("p").cast("int").alias("quartile"),
+            F.round(
+                (
+                    F.col("xlo").cast("decimal(30,2)") * (4 - F.col("f"))
+                    + F.col("xhi").cast("decimal(30,2)") * F.col("f")
+                ).cast("double")
+                / 4.0,
+                4,
+            ).alias("value"),
+        )
+        .orderBy("quartile")
+    )
+
+
+PRICE_QUARTILES_SQL = """
+WITH ranked AS (
+    SELECT l_extendedprice,
+           ROW_NUMBER() OVER (ORDER BY l_extendedprice) AS i
+    FROM lineitem
+), n AS (SELECT COUNT(*) AS n FROM lineitem),
+pos AS (
+    SELECT r.p AS p,
+           1 + ((n.n - 1) * r.p) // 4 AS lo,
+           ((n.n - 1) * r.p) % 4 AS f,
+           CASE WHEN ((n.n - 1) * r.p) % 4 > 0
+                THEN 2 + ((n.n - 1) * r.p) // 4
+                ELSE 1 + ((n.n - 1) * r.p) // 4 END AS hi
+    FROM range(1, 4) r(p) CROSS JOIN n
+), xlo AS (
+    SELECT pos.p, pos.f, ranked.l_extendedprice AS xlo
+    FROM ranked JOIN pos ON ranked.i = pos.lo
+), xhi AS (
+    SELECT pos.p, ranked.l_extendedprice AS xhi
+    FROM ranked JOIN pos ON ranked.i = pos.hi
+)
+SELECT CAST(xlo.p AS INT) AS quartile,
+       ROUND(CAST(CAST(xlo AS DECIMAL(30,2)) * (4 - f)
+                  + CAST(xhi AS DECIMAL(30,2)) * f AS DOUBLE) / 4.0,
+             4) AS value
+FROM xlo JOIN xhi ON xlo.p = xhi.p
+ORDER BY quartile
+"""
+
+
+# ---------------------------------------------------------------------------
+# Multi-quantile grid from ONE grouped rank pass: p10/p50/p90 per
+# event type as exact ceil(p·n)-th order statistics — three
+# percentiles priced at one rank (the two-pass MAD pattern shows the
+# chained variant; this is the flat one). Elements, never
+# interpolation, so cross-engine exactness is free; positions are
+# pure integer ceilings. For tiny groups the positions can coincide —
+# each conditional max then picks the same element, identically on
+# both engines.
+# ---------------------------------------------------------------------------
+
+
+def value_percentile_grid_by_type(spark: SparkSession, sf: str) -> DataFrame:
+    from ..operators.ranks import parallel_row_number
+
+    e = load_events(spark, sf).select("event_type", "event_id", "value")
+    r = parallel_row_number(
+        e, "value", ["event_id"], part_cols=["event_type"], out_col="i"
+    )
+    nn = e.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+    picked = (
+        r.join(F.broadcast(nn), "event_type")  # one row per type
+        .filter(
+            (F.col("i") == F.expr("(n + 9) DIV 10"))
+            | (F.col("i") == F.expr("(n + 1) DIV 2"))
+            | (F.col("i") == F.expr("(9 * n + 9) DIV 10"))
+        )
+    )
+    return (
+        picked.groupBy("event_type")
+        .agg(
+            F.max(
+                F.when(F.col("i") == F.expr("(n + 9) DIV 10"), F.col("value"))
+            ).alias("p10"),
+            F.max(
+                F.when(F.col("i") == F.expr("(n + 1) DIV 2"), F.col("value"))
+            ).alias("p50"),
+            F.max(
+                F.when(
+                    F.col("i") == F.expr("(9 * n + 9) DIV 10"), F.col("value")
+                )
+            ).alias("p90"),
+        )
+        .orderBy("event_type")
+    )
+
+
+PERCENTILE_GRID_SQL = """
+WITH r AS (
+    SELECT event_type, value,
+           ROW_NUMBER() OVER (PARTITION BY event_type
+                              ORDER BY value, event_id) AS i,
+           COUNT(*) OVER (PARTITION BY event_type) AS n
+    FROM events
+)
+SELECT event_type,
+       MAX(CASE WHEN i = (n + 9) // 10 THEN value END) AS p10,
+       MAX(CASE WHEN i = (n + 1) // 2 THEN value END) AS p50,
+       MAX(CASE WHEN i = (9 * n + 9) // 10 THEN value END) AS p90
+FROM r
+WHERE i = (n + 9) // 10 OR i = (n + 1) // 2 OR i = (9 * n + 9) // 10
+GROUP BY event_type
+ORDER BY event_type
+"""

@@ -31,15 +31,24 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine
 from ..sources.catalog import load_table
-from .analytics_ext21 import (
-    BLOOM_DECONTAM_CHECK_SQL as _BLOOM_DECONTAM_CHECK_SQL,
+from .curation import BPE_CHECK_SQL, BPE_ENCODE_CHECK_SQL, bpe_check, bpe_encode_check
+from .dedup import ngram_jaccard_exact
+from .graphs import (
+    HITS_CHECK_SQL,
+    KCORE_CHECK_SQL,
+    PAGERANK_CHECK_SQL,
+    hits_check,
+    kcore_check,
+    pagerank_check,
 )
-from .analytics_ext22 import CMS_CHECK_SQL as _CMS_CHECK_SQL
-from .curation import BPE_CHECK_SQL as _BPE_CHECK_SQL
-from .curation import BPE_ENCODE_CHECK_SQL as _BPE_ENCODE_CHECK_SQL
-from .graphs import HITS_CHECK_SQL as _HITS_CHECK_SQL
-from .graphs import KCORE_CHECK_SQL as _KCORE_CHECK_SQL
-from .graphs import PAGERANK_CHECK_SQL as _PAGERANK_CHECK_SQL
+from .sketches import (
+    BLOOM_DECONTAM_CHECK_SQL,
+    CMS_CHECK_SQL,
+    bloom_decontam_check,
+    cms_check,
+    kmv_overlap_check,
+)
+from .stats import pca_check
 
 
 def _one_row(*dfs: DataFrame) -> DataFrame:
@@ -62,8 +71,6 @@ def minhash_recall_check(spark: SparkSession, sf: str) -> DataFrame:
     by construction: every candidate is verified with the same exact
     Jaccard the brute-force twin uses."""
     from ..operators.dedup import minhash_lsh_duplicates
-    from .analytics import ngram_jaccard_exact
-
     docs = load_table(spark, sf, "documents")
     exact = ngram_jaccard_exact(spark, sf, threshold=0.7).select("id_a", "id_b")
     lsh = minhash_lsh_duplicates(docs, threshold=0.7).select("id_a", "id_b")
@@ -418,19 +425,6 @@ WHERE list_cosine_similarity(CAST(CAST(a.embedding AS FLOAT[]) AS DOUBLE[]),
 """
 
 
-VERIFY_QUERIES = {
-    "minhash_recall_check": (minhash_recall_check, MINHASH_RECALL_SQL),
-    "simhash_recall_check": (simhash_recall_check, SIMHASH_RECALL_SQL),
-    "knn_recall_check": (knn_recall_check, KNN_RECALL_SQL),
-    "embedding_neardup_check": (embedding_neardup_check, EMBEDDING_NEARDUP_CHECK_SQL),
-    "semantic_dedup_check": (semantic_dedup_check, SEMANTIC_DEDUP_CHECK_SQL),
-    # round-5 addition: registered AFTER the 50 pinned driver slots
-    "pq_recall_check": (pq_recall_check, PQ_RECALL_SQL),
-    # round-7: the composed IVF-PQ index gate
-    "ivfpq_recall_check": (ivfpq_recall_check, IVFPQ_RECALL_SQL),
-}
-
-
 # ---------------------------------------------------------------------------
 # Sequence packing invariants (exact-measure oracle)
 # ---------------------------------------------------------------------------
@@ -578,8 +572,6 @@ def cluster_check(spark: SparkSession, sf: str) -> DataFrame:
     recursive-CTE transitive closure. Unlike the recall twins this is
     a full-output equality check of an iterative algorithm."""
     from ..operators.dedup import duplicate_clusters
-    from .analytics import ngram_jaccard_exact
-
     pairs = ngram_jaccard_exact(spark, sf, threshold=0.7).select(
         "id_a", "id_b"
     )
@@ -621,16 +613,6 @@ SELECT node AS doc_id, MIN(r) AS cluster_id,
        node = MIN(r) AS is_canonical
 FROM reach GROUP BY node ORDER BY doc_id
 """
-
-
-VERIFY_QUERIES.update(
-    {
-        "packing_check": (packing_check, PACKING_CHECK_SQL),
-        "quantile_sketch_check": (quantile_sketch_check, QUANTILE_SKETCH_SQL),
-        "winnow_guarantee_check": (winnow_guarantee_check, WINNOW_GUARANTEE_SQL),
-        "cluster_check": (cluster_check, CLUSTER_CHECK_SQL),
-    }
-)
 
 
 # ---------------------------------------------------------------------------
@@ -701,10 +683,6 @@ def approx_suite_check(spark: SparkSession, sf: str) -> DataFrame:
     # side; algorithm invariants ride the ok predicates. String-valued
     # checks (the first merge PAIR itself) stay in the per-entry local
     # oracles, which carry richer columns than this digest schema.
-    from .curation import bpe_check, bpe_encode_check
-    from .graphs import hits_check, kcore_check, pagerank_check
-    from .stats import pca_check
-
     parts += [
         norm(bpe_check(spark, sf), "bpe_train",
              "n_merges", "first_freq", "freqs_positive", None),
@@ -722,8 +700,6 @@ def approx_suite_check(spark: SparkSession, sf: str) -> DataFrame:
     # 18th family (round 14): Bloom-filter decontamination — exact
     # doc/pair counts DuckDB-recomputed; the no-false-negative and
     # fp-bound laws ride the ok predicates.
-    from .analytics_ext21 import bloom_decontam_check
-
     parts.append(
         norm(bloom_decontam_check(spark, sf), "bloom_decontam",
              "n_exact_docs", "n_exact_pairs", "no_false_neg",
@@ -732,8 +708,6 @@ def approx_suite_check(spark: SparkSession, sf: str) -> DataFrame:
     # 19th family (round 14): count-min sketch — fact/probe counts
     # DuckDB-recomputed; the no-underestimate and collision-mass
     # bound laws ride the ok predicates.
-    from .analytics_ext22 import cms_check
-
     parts.append(
         norm(cms_check(spark, sf), "cms",
              "n_rows", "n_probes", "no_underestimate", "bound_ok")
@@ -741,8 +715,6 @@ def approx_suite_check(spark: SparkSession, sf: str) -> DataFrame:
     # 17th family (round 11): KMV distinct-sketch set algebra — the
     # pairwise overlap estimates must land inside the theoretical
     # bottom-k error bounds (exact pair counts DuckDB-recomputed).
-    from .analytics_ext16 import kmv_overlap_check
-
     parts.append(
         norm(
             kmv_overlap_check(spark, sf)
@@ -801,15 +773,15 @@ APPROX_SUITE_SQL = "\nUNION ALL\n".join(
         # imported from their home modules (curation/graphs are
         # import-cycle-safe; stats is not, so PCA's 1-row twin is the
         # inline literal below, kept in sync with stats.PCA_CHECK_SQL)
-        _suite_member("bpe_train", _BPE_CHECK_SQL,
+        _suite_member("bpe_train", BPE_CHECK_SQL,
                       "n_merges", "first_freq", "freqs_positive", None),
-        _suite_member("bpe_encode", _BPE_ENCODE_CHECK_SQL,
+        _suite_member("bpe_encode", BPE_ENCODE_CHECK_SQL,
                       "n_docs", "total_words", "reconstruction_ok", "bounds_ok"),
-        _suite_member("kcore", _KCORE_CHECK_SQL,
+        _suite_member("kcore", KCORE_CHECK_SQL,
                       "n_edges", "n_deg_ge_k", "core_sound_ok", "core_bounded_ok"),
-        _suite_member("hits", _HITS_CHECK_SQL,
+        _suite_member("hits", HITS_CHECK_SQL,
                       "n_nodes", "n_edges", "hub_norm_ok", "auth_norm_ok"),
-        _suite_member("pagerank", _PAGERANK_CHECK_SQL,
+        _suite_member("pagerank", PAGERANK_CHECK_SQL,
                       "n_nodes", "n_edges", "rank_conserved", "rank_floor_ok"),
         (
             "SELECT 'pca' AS family, CAST(COUNT(*) AS BIGINT) AS m1, "
@@ -818,12 +790,12 @@ APPROX_SUITE_SQL = "\nUNION ALL\n".join(
         ),
         # 18th family (round 14): Bloom decontamination — exact
         # doc/pair counts recomputed; the Bloom laws ride ok_*
-        _suite_member("bloom_decontam", _BLOOM_DECONTAM_CHECK_SQL,
+        _suite_member("bloom_decontam", BLOOM_DECONTAM_CHECK_SQL,
                       "n_exact_docs", "n_exact_pairs", "no_false_neg",
                       "fp_bound_ok"),
         # 19th family (round 14): count-min — fact/probe counts
         # recomputed; the CMS laws ride ok_*
-        _suite_member("cms", _CMS_CHECK_SQL,
+        _suite_member("cms", CMS_CHECK_SQL,
                       "n_rows", "n_probes", "no_underestimate",
                       "bound_ok"),
         # 17th family (round 11): KMV overlap — pair count + exact
@@ -841,6 +813,3 @@ APPROX_SUITE_SQL = "\nUNION ALL\n".join(
         ),
     ]
 ) + "\nORDER BY family"
-
-
-VERIFY_QUERIES["approx_suite_check"] = (approx_suite_check, APPROX_SUITE_SQL)

@@ -48,47 +48,6 @@ OMDB_LOOKUP = T.StructType(
     ]
 )
 
-# ---- canonical at-rest tables (reference schema.sql:4-40, affinity-fixed) ----
-
-MOVIES = T.StructType(
-    [
-        T.StructField("movie_id", T.LongType(), False),
-        T.StructField("title", T.StringType(), True),
-        T.StructField("release_year", T.IntegerType(), True),
-        T.StructField("imdb_id", T.StringType(), True),
-        T.StructField("plot", T.StringType(), True),
-        T.StructField("director", T.StringType(), True),
-        T.StructField("box_office_dollars", T.LongType(), True),
-        T.StructField("runtime_mins", T.IntegerType(), True),
-        T.StructField("imdb_rating", T.DoubleType(), True),
-        T.StructField("created_at", T.TimestampType(), True),
-    ]
-)
-
-GENRES = T.StructType(
-    [
-        T.StructField("genre_id", T.LongType(), False),
-        T.StructField("genre_name", T.StringType(), False),
-    ]
-)
-
-MOVIE_GENRES = T.StructType(
-    [
-        T.StructField("movie_id", T.LongType(), False),
-        T.StructField("genre_id", T.LongType(), False),
-    ]
-)
-
-RATINGS = T.StructType(
-    [
-        T.StructField("rating_id", T.LongType(), False),
-        T.StructField("movie_id", T.LongType(), False),
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("rating", T.DoubleType(), False),
-        T.StructField("timestamp", T.LongType(), False),
-    ]
-)
-
 # ---- the driver's synthetic corpus (TESTDATA.md) ----
 # Declared exactly as the parquet files carry them, so a load names its
 # schema and runs no footer-reading Spark job. Every field is nullable
@@ -187,7 +146,7 @@ EMBEDDINGS = T.StructType(
 
 # Table name -> declared schema. ``events`` alone is None, i.e. read with
 # inference: its ``ts`` has shipped as both parquet TIMESTAMP(NANOS) and
-# TIMESTAMP(MICROS), and ``plans/analytics.py::load_events`` picks its
+# TIMESTAMP(MICROS), and ``sources/catalog.py::load_events`` picks its
 # epoch arithmetic from the type it finds. Only the file footer knows
 # which one a shipment carries; a declared ``timestamp_ntz`` would fail
 # to read a NANOS shipment.

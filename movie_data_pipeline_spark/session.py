@@ -57,7 +57,7 @@ def get_spark(
         # serve COUNT/MIN/MAX-only scans from parquet footer statistics
         .config("spark.sql.parquet.aggregatePushdown", "true")
         # a TIMESTAMP(NANOS) parquet column reads as its raw int64
-        # instead of failing the scan (plans/analytics.py::load_events)
+        # instead of failing the scan (sources/catalog.py::load_events)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.enabled", "false")

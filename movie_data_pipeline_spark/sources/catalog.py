@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import TESTDATA
 
@@ -24,8 +25,39 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     as the declared ``array<float>``); the schema test pins the
     declarations against every corpus first.
 
-    ``events`` is read with inference: ``plans/analytics.py::load_events``
+    ``events`` is read with inference: ``load_events`` below
     needs the physical type of ``ts`` to pick its epoch arithmetic."""
     schema = TESTDATA[name]
     reader = spark.read if schema is None else spark.read.schema(schema)
     return reader.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def load_events(spark: SparkSession, sf: str) -> DataFrame:
+    """Load events with epoch columns, adapting to whatever physical
+    type ``ts`` carries — the driver testdata has shipped it as both
+    parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS):
+
+    - TIMESTAMP(NANOS): Spark 4 rejects it by default; the session
+      reads it as raw nanos (LongType, ``nanosAsLong`` set in
+      ``session.get_spark``) and this derives µs/sec with integer DIV
+      (ns epochs exceed 2^53 — double math would corrupt them).
+    - TIMESTAMP(MICROS) as TIMESTAMP_NTZ: ``timestampdiff`` from the
+      NTZ epoch is timezone-independent wall-clock-as-UTC micros —
+      exactly DuckDB's ``epoch_us(ts)``.
+    - TIMESTAMP (session-tz): ``unix_micros`` directly.
+
+    All downstream event queries consume ``ts_us``/``ts_sec`` only,
+    never raw ``ts``, so the physical type is contained here."""
+    df = load_table(spark, sf, "events")
+    ts_type = dict(df.dtypes)["ts"]
+    if ts_type == "bigint":
+        return df.withColumn("ts_us", F.expr("ts DIV 1000")).withColumn(
+            "ts_sec", F.expr("ts DIV 1000000000")
+        )
+    if ts_type == "timestamp_ntz":
+        us = F.expr("timestampdiff(MICROSECOND, TIMESTAMP_NTZ'1970-01-01 00:00:00', ts)")
+    else:
+        us = F.expr("unix_micros(ts)")
+    return df.withColumn("ts_us", us).withColumn(
+        "ts_sec", F.expr("ts_us DIV 1000000")
+    )

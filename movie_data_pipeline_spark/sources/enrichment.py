@@ -14,16 +14,13 @@ cascade becomes an ordered-fallback ("priority") join:
         with-year-before-without) → keep rank 1
       → left join back to movies → coalesce defaults for misses.
 
-This is deterministic, testable, and fully distributed — the network
-concern is isolated in ``fetch_lookup_batch`` (a ``mapInPandas``
-builder for live fetching, stubbed offline by default).
+This is deterministic, testable, and fully distributed. Live fetching
+is ``omdb_datasource``'s ``mode=http`` path; offline runs stage or stub
+the lookup table.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -113,67 +110,3 @@ def stub_lookup(spark) -> DataFrame:
     from .. import schemas
 
     return spark.createDataFrame([], schemas.OMDB_LOOKUP)
-
-
-def fetch_lookup_batch(api_key: str, base_url: str = "https://www.omdbapi.com/"):
-    """Builder for a live-fetch ``mapInPandas`` function (S3).
-
-    Returns a function suitable for
-    ``candidates_df.mapInPandas(fn, schema=OMDB_LOOKUP)`` where
-    ``candidates_df`` has columns (cand_title, probe_year). Retries and
-    pacing are partition-local (reference etl.py:29-30,131). Offline by
-    default — network access is the caller's explicit choice.
-    """
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import time
-
-        import requests
-
-        for pdf in batches:
-            rows = []
-            for title, year in zip(pdf["cand_title"], pdf["probe_year"]):
-                params = {"apikey": api_key, "type": "movie", "t": title}
-                if pd.notna(year):
-                    params["y"] = int(year)
-                rec = None
-                for _ in range(2):  # API_RETRIES
-                    try:
-                        r = requests.get(base_url, params=params, timeout=10)
-                        r.raise_for_status()
-                        data = r.json()
-                        if data.get("Response") == "True":
-                            rating = data.get("imdbRating")
-                            rec = {
-                                "lookup_title": title,
-                                "lookup_year": int(year) if pd.notna(year) else None,
-                                "imdb_id": data.get("imdbID"),
-                                "plot": data.get("Plot") or "Not Available",
-                                "director": data.get("Director") or "Unknown",
-                                "box_office": data.get("BoxOffice"),
-                                "runtime": data.get("Runtime"),
-                                "imdb_rating": float(rating)
-                                if rating not in (None, "N/A")
-                                else None,
-                            }
-                        break
-                    except requests.RequestException:
-                        time.sleep(1)
-                if rec:
-                    rows.append(rec)
-                time.sleep(0.5)  # REQUEST_DELAY, partition-local pacing
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "lookup_title",
-                    "lookup_year",
-                    "imdb_id",
-                    "plot",
-                    "director",
-                    "box_office",
-                    "runtime",
-                    "imdb_rating",
-                ],
-            )
-
-    return fetch

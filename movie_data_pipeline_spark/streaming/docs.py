@@ -287,7 +287,7 @@ def run_streaming_sentence_index(
     doc_stream: DataFrame, index_path: str, checkpoint: str
 ):
     """Streaming/incremental sentence-dedup index (r13 VERDICT item
-    7). ``dup_sentence_stats`` (plans/analytics_ext19.py) is cross-doc
+    7). ``dup_sentence_stats`` (plans/dedup.py) is cross-doc
     STATEFUL — a sentence's distinct-doc count only grows as documents
     arrive — so a per-batch emission of final stats would be wrong the
     moment a later batch repeated a sentence. The honest streaming
@@ -305,7 +305,7 @@ def run_streaming_sentence_index(
     a doc_id must appear in at most one micro-batch (the same
     upstream-identity assumption as the dedup stream's index fold) —
     a recurring id would double its instance counts in the fold."""
-    from ..plans.analytics_ext19 import sentence_keys
+    from ..plans.dedup import sentence_keys
     from .sketches import _atomic_partial_write
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

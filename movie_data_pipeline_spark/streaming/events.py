@@ -612,7 +612,7 @@ def run_first_seen_sink(
     and any micro-batch slicing converge to the same table — the
     strongest replay-safety class a fold can have (last-write-wins
     needs an order column; MIN needs nothing). The growth curve
-    (plans/analytics_ext11.cumulative_unique_users) then derives from
+    (plans/events.py::cumulative_unique_users) then derives from
     this dimension-sized table without rescanning the stream's
     history — the streaming twin of the batch first-seen groupBy.
 
@@ -677,7 +677,7 @@ def run_growth_accounting_sink(
       a MIN over the incidence, so no second state table is needed;
     - ``out_dir/wau_trailing_7d`` — per day: distinct users active in
       [day-6, day], the calendar-bounded range join of the batch
-      entry (plans/analytics_ext12.wau_trailing_7d).
+      entry (plans/events.py::wau_trailing_7d).
 
     After the stream drains, both outputs equal the batch entries on
     the same corpus — asserted by the stream≡batch tests.
@@ -758,7 +758,7 @@ def run_monthly_rollup_sink(
     amount_col: str = "o_totalprice",
 ):
     """Streaming twin of the batch IVM rollup
-    (plans/analytics_ext13.incremental_daily_rollup): fold each
+    (plans/tpch.py::incremental_daily_rollup): fold each
     micro-batch's per-month (COUNT, exact-decimal SUM) partial into a
     state parquet by ADDITION — the counts-and-sums monoid — and
     publish the rounded monthly rollup after every merge.

@@ -51,6 +51,53 @@ def test_oracle_match(spark, duck, name):
     assert _normalize(spark_rows) == _normalize(duck_rows)
 
 
+
+def test_q7_half_cent_tie_planted(spark, tmp_path):
+    """A Q7 revenue that sums to x.xx5 exactly (543,804.705): Spark's
+    ROUND on a double rounds its decimal form half-up (.71), DuckDB's
+    rounds the double 543804.70499… down (.70). Both twins round the
+    exact decimal sum before the cast, so they agree on the tie."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from movie_data_pipeline_spark.plans.tpch import Q7_SQL, q7_nation_trade_volume
+    from movie_data_pipeline_spark.schemas import TESTDATA
+
+    ship = dt.datetime(1995, 6, 1)
+    tables = {
+        "nation": (["n_nationkey", "n_name"],
+                   [(1, "NATION_1"), (2, "NATION_2"), (3, "NATION_3")]),
+        "supplier": (["s_suppkey", "s_nationkey"], [(10, 1), (20, 2), (30, 3)]),
+        "customer": (["c_custkey", "c_nationkey"], [(100, 2), (200, 1)]),
+        "orders": (["o_orderkey", "o_custkey"], [(1000, 100), (2000, 200)]),
+        "lineitem": (
+            ["l_orderkey", "l_suppkey", "l_extendedprice", "l_discount", "l_shipdate"],
+            [
+                # NATION_1 → NATION_2: 500,000 + 43,804.705 = 543,804.705
+                (1000, 10, 500000.0, 0.0, ship),
+                (1000, 10, 43804.705, 0.0, ship),
+                (2000, 20, 1234.5, 0.1, ship),  # NATION_2 → NATION_1
+                (2000, 30, 99.0, 0.0, ship),  # NATION_3 supplier: filtered
+            ],
+        ),
+    }
+    con = duckdb.connect()
+    for name, (cols, rows) in tables.items():
+        # the corpus's physical types: load_table reads the declared schema
+        types = {f.name: f.dataType for f in TESTDATA[name].fields}
+        path = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, cols).select(
+            *[F.col(c).cast(types[c]) for c in cols]
+        ).write.parquet(path)
+        con.execute(
+            f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}/*.parquet')"
+        )
+    got = [tuple(r) for r in q7_nation_trade_volume(spark, str(tmp_path)).collect()]
+    assert ("NATION_1", "NATION_2", 1995, 543804.71, 2) in got
+    assert _normalize(got) == _normalize(con.execute(Q7_SQL).fetchall())
+    con.close()
+
 def test_oracle_artifact_at_head():
     """The committed ORACLE_r{N}.json (round-10 VERDICT item 2: a
     per-round audit trail for the registry entries past driver slot

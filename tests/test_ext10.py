@@ -80,9 +80,7 @@ def test_fuzzy_clusters_transitive_chain(spark, tmp_path):
     # ends 3 apart — only transitivity links them) + a singleton
     import pyspark.sql.functions as F  # noqa: F811
 
-    from movie_data_pipeline_spark.plans.analytics_ext10 import (
-        fuzzy_name_clusters,
-    )
+    from movie_data_pipeline_spark.plans.dedup import fuzzy_name_clusters
 
     part = spark.createDataFrame(
         [(i, n) for i, n in enumerate(

@@ -6,9 +6,7 @@ unique/duplicated documents."""
 
 from __future__ import annotations
 
-from movie_data_pipeline_spark.plans.analytics_ext11 import (
-    _CLICK_WINDOW_US,
-)
+from movie_data_pipeline_spark.plans.events import _CLICK_WINDOW_US
 
 
 def _write_events(spark, tmp_path, rows):
@@ -36,9 +34,7 @@ def _write_events(spark, tmp_path, rows):
 
 
 def test_cumulative_unique_users_planted(spark, tmp_path):
-    from movie_data_pipeline_spark.plans.analytics_ext11 import (
-        cumulative_unique_users,
-    )
+    from movie_data_pipeline_spark.plans.events import cumulative_unique_users
 
     day = 86_400 * 1_000_000
     rows = [
@@ -59,9 +55,7 @@ def test_cumulative_unique_users_planted(spark, tmp_path):
 
 
 def test_funnel_window_in_and_out(spark, tmp_path):
-    from movie_data_pipeline_spark.plans.analytics_ext11 import (
-        funnel_within_window,
-    )
+    from movie_data_pipeline_spark.plans.events import funnel_within_window
 
     h = 3_600 * 1_000_000
     rows = [
@@ -81,9 +75,7 @@ def test_funnel_window_in_and_out(spark, tmp_path):
 
 
 def test_interarrival_median_day_bounded(spark, tmp_path):
-    from movie_data_pipeline_spark.plans.analytics_ext11 import (
-        interarrival_p50_by_type,
-    )
+    from movie_data_pipeline_spark.plans.events import interarrival_p50_by_type
 
     day = 86_400 * 1_000_000
     # day 0: events at 0, 10, 30 (gaps 10, 20); day 1: at day, day+40
@@ -99,9 +91,7 @@ def test_interarrival_median_day_bounded(spark, tmp_path):
 
 
 def test_trigram_novelty_planted(spark, tmp_path):
-    from movie_data_pipeline_spark.plans.analytics_ext11 import (
-        doc_trigram_novelty,
-    )
+    from movie_data_pipeline_spark.plans.curation import doc_trigram_novelty
 
     docs = spark.createDataFrame(
         [

@@ -51,7 +51,7 @@ def test_parallel_prefix_sum_property(spark):
 def test_wau_and_new_returning_planted(spark, tmp_path):
     import datetime as dt
 
-    from movie_data_pipeline_spark.plans.analytics_ext12 import (
+    from movie_data_pipeline_spark.plans.events import (
         daily_new_vs_returning,
         wau_trailing_7d,
     )
@@ -94,7 +94,7 @@ def test_wau_and_new_returning_planted(spark, tmp_path):
 
 
 def test_pareto_and_weighted_median_planted(spark, tmp_path):
-    from movie_data_pipeline_spark.plans.analytics_ext12 import (
+    from movie_data_pipeline_spark.plans.stats import (
         revenue_pareto_8020,
         weighted_median_price,
     )

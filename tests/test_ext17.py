@@ -123,10 +123,7 @@ def test_native_chunk_docs_matches_oracle_on_edge_corpus(spark):
     tokenization matches DuckDB's regex class on Unicode-whitespace
     text. The UDTF twin (zero rows on empty; Unicode str.split) is
     exactly why it is NOT the registry entry."""
-    from movie_data_pipeline_spark.plans.analytics_ext3 import (
-        CHUNK_DOCS_SQL,
-        chunk_tokens_native,
-    )
+    from movie_data_pipeline_spark.plans.text import CHUNK_DOCS_SQL, chunk_tokens_native
 
     rows = [
         (1, ""),
@@ -187,9 +184,7 @@ def test_udtf_and_oracle_agree_on_injected_sentence_corpus(spark):
 
     # oracle: the ext17 recursive CTE minus the sentence-injection
     # prelude (this corpus already has sentences), budget 10
-    from movie_data_pipeline_spark.plans.analytics_ext17 import (
-        CHUNK_DOCS_SENTENCES_SQL,
-    )
+    from movie_data_pipeline_spark.plans.text import CHUNK_DOCS_SENTENCES_SQL
 
     sql = CHUNK_DOCS_SENTENCES_SQL
     # strip injection: feed text straight into `marked`

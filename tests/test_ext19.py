@@ -42,7 +42,7 @@ ROWS = [
 
 
 def test_source_template_prefix_edges(spark):
-    from movie_data_pipeline_spark.plans.analytics_ext19 import (
+    from movie_data_pipeline_spark.plans.curation import (
         SOURCE_TEMPLATE_PREFIX_SQL,
         source_template_prefix,
     )
@@ -75,7 +75,7 @@ def test_source_template_prefix_edges(spark):
 
 
 def test_dup_sentence_stats_edges(spark):
-    from movie_data_pipeline_spark.plans.analytics_ext19 import (
+    from movie_data_pipeline_spark.plans.dedup import (
         DUP_SENTENCE_STATS_SQL,
         dup_sentence_stats,
     )

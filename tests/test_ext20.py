@@ -62,7 +62,7 @@ SPAN_ROWS = [
 
 
 def test_exact_span_dedup_edges(spark):
-    from movie_data_pipeline_spark.plans.analytics_ext20 import (
+    from movie_data_pipeline_spark.plans.dedup import (
         EXACT_SPAN_DEDUP_SQL,
         exact_span_dedup,
     )
@@ -103,7 +103,7 @@ DROP_ROWS = [
 
 
 def test_drop_dup_sentences_edges(spark):
-    from movie_data_pipeline_spark.plans.analytics_ext20 import (
+    from movie_data_pipeline_spark.plans.dedup import (
         DROP_DUP_SENTENCES_SQL,
         drop_dup_sentences_docs,
     )
@@ -135,9 +135,7 @@ def test_rewrite_helper_on_crafted_sentences(spark):
     independent of the injection/splitting pipeline."""
     from pyspark.sql import functions as F
 
-    from movie_data_pipeline_spark.plans.analytics_ext20 import (
-        rewrite_without_cross_doc_dups,
-    )
+    from movie_data_pipeline_spark.plans.dedup import rewrite_without_cross_doc_dups
 
     sent = spark.createDataFrame(
         [

@@ -1,4 +1,4 @@
-"""Planted-corpus tests for the round-8 batch (plans/analytics_ext6):
+"""Planted-corpus tests for plans/dedup.py and plans/curation.py:
 exact repeated n-gram spans, per-doc duplication stats, and DSIR
 hashed n-gram importance weights — expected values derived
 independently in Python (hashlib md5 for DSIR, hand-constructed
@@ -9,12 +9,11 @@ from __future__ import annotations
 import hashlib
 import math
 
-from movie_data_pipeline_spark.plans.analytics_ext6 import (
-    _DSIR_B,
+from movie_data_pipeline_spark.plans.curation import _DSIR_B, dsir_importance_weights
+from movie_data_pipeline_spark.plans.dedup import (
     _SPAN_L,
     _span_rows,
     dup_span_doc_stats,
-    dsir_importance_weights,
     repeated_ngram_spans,
 )
 
@@ -179,9 +178,7 @@ def test_value_mad_outliers_planted(spark, tmp_path):
     MAD 0 and the strict > fence flags nothing."""
     import datetime as dt
 
-    from movie_data_pipeline_spark.plans.analytics_ext6 import (
-        value_mad_outliers,
-    )
+    from movie_data_pipeline_spark.plans.stats import value_mad_outliers
 
     rows = [
         (i + 1, dt.datetime(2024, 1, 1, 0, i), 1, "a", v, "{}")
@@ -208,7 +205,7 @@ def test_score_pr_curve_planted(spark, tmp_path):
     against a Python reimplementation."""
     import math
 
-    from movie_data_pipeline_spark.plans.analytics_ext6 import score_pr_curve
+    from movie_data_pipeline_spark.plans.stats import score_pr_curve
 
     xs = [(-2.0, 9), (0.0, 3), (2.0, 7), (1.0, 1)]  # (x, label)
     rows = [
@@ -233,7 +230,7 @@ def test_score_pr_curve_planted(spark, tmp_path):
 
     # AUC over the same planted scores: positives {σ(-2), σ(2)},
     # negatives {σ(0), σ(1)} — exactly 2 of 4 pos>neg pairs → 0.5
-    from movie_data_pipeline_spark.plans.analytics_ext6 import score_auc
+    from movie_data_pipeline_spark.plans.stats import score_auc
 
     auc_row = score_auc(spark, str(tmp_path)).collect()[0]
     assert (auc_row.n_pos, auc_row.n_neg, auc_row.auc) == (2, 2, 0.5)
@@ -244,9 +241,7 @@ def test_priority_loo_encoding_planted(spark, tmp_path):
     loo(60) = 15.0; a singleton group encodes NULL."""
     import datetime as dt
 
-    from movie_data_pipeline_spark.plans.analytics_ext6 import (
-        priority_loo_encoding,
-    )
+    from movie_data_pipeline_spark.plans.tpch import priority_loo_encoding
 
     d = dt.date(2024, 1, 1)
     rows = [
@@ -270,7 +265,7 @@ def test_priority_loo_encoding_planted(spark, tmp_path):
 def test_dedup_survivors_invariants(spark):
     from pyspark.sql import functions as F
 
-    from movie_data_pipeline_spark.plans.analytics_ext6 import dedup_survivors
+    from movie_data_pipeline_spark.plans.dedup import dedup_survivors
 
     out = dedup_survivors(spark, "/root/testdata/sf0.001").localCheckpoint()
     n_docs = out.count()

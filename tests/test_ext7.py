@@ -1,5 +1,5 @@
-"""Planted-graph / planted-frontier tests for the round-8 ext7 batch
-(plans/analytics_ext7): BFS hop distances against a hand-drawn graph,
+"""Planted-graph / planted-frontier tests for the graph, skyline and
+ranking plans: BFS hop distances against a hand-drawn graph,
 the two-phase skyline against the brute-force dominance definition,
 NDCG position weights against an independent Python computation, and
 RRF fusion arithmetic on a constructed pair of rank lists."""
@@ -11,12 +11,8 @@ import math
 from pyspark.sql import functions as F
 
 from movie_data_pipeline_spark.operators.graph import bfs_hops
-from movie_data_pipeline_spark.plans.analytics_ext7 import (
-    _NDCG_K,
-    _NDCG_W,
-    _SKY_BUCKETS,
-    _skyline_pass,
-)
+from movie_data_pipeline_spark.plans.retrieval import _NDCG_K, _NDCG_W
+from movie_data_pipeline_spark.plans.tpch import _SKY_BUCKETS, _skyline_pass
 
 
 def test_bfs_hops_planted(spark):
@@ -93,7 +89,7 @@ def test_ndcg_weights_are_log2_discounts():
 
 
 def test_rrf_fusion_arithmetic(spark):
-    from movie_data_pipeline_spark.plans.analytics_ext7 import _RRF_K
+    from movie_data_pipeline_spark.plans.retrieval import _RRF_K
 
     # a doc ranked 1 lexically and 2 vectorially must outscore a doc
     # ranked 1 on a single list; fused score matches the formula
@@ -125,9 +121,7 @@ def test_affinity_cap_none_is_exact(spark):
     support (co is a lower bound) and never touches degrees."""
     from itertools import combinations
 
-    from movie_data_pipeline_spark.plans.analytics_ext7 import (
-        part_affinity_frame,
-    )
+    from movie_data_pipeline_spark.plans.retrieval import part_affinity_frame
 
     rows = [
         (c, p)

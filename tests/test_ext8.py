@@ -1,5 +1,5 @@
-"""Planted-fixture tests for the round-8 ext8 batch
-(plans/analytics_ext8): PMI against hand-counted bigram arithmetic,
+"""Planted-fixture tests for the text, events and stats plans
+(plans/text.py, events.py, stats.py): PMI against hand-counted bigram arithmetic,
 per-type ACF against an independent numpy-free Python recomputation
 (including the day-boundary exclusion), Gini against the closed-form
 values of degenerate distributions, token entropy against
@@ -10,14 +10,13 @@ from __future__ import annotations
 
 import math
 
-from movie_data_pipeline_spark.plans.analytics_ext8 import (
+from movie_data_pipeline_spark.plans.events import value_acf_frame
+from movie_data_pipeline_spark.plans.stats import (
     _BENFORD,
     benford_frame,
-    pmi_bigrams_frame,
     spend_gini_frame,
-    token_entropy_frame,
-    value_acf_frame,
 )
+from movie_data_pipeline_spark.plans.text import pmi_bigrams_frame, token_entropy_frame
 
 
 def test_pmi_bigrams_hand_counted(spark):

@@ -9,12 +9,12 @@ from __future__ import annotations
 import math
 
 from movie_data_pipeline_spark.operators.fuzzy import fuzzy_self_join
-from movie_data_pipeline_spark.plans.analytics_ext9 import (
-    _RBO_P,
+from movie_data_pipeline_spark.plans.events import (
     dow_uniformity_frame,
     value_cusum_frame,
     value_trend_frame,
 )
+from movie_data_pipeline_spark.plans.retrieval import _RBO_P
 
 
 def _lev(a: str, b: str) -> int:

@@ -692,7 +692,7 @@ def test_asof_join_backward_and_forward(spark):
 
 
 def test_approx_distinct_error_bound(spark):
-    from movie_data_pipeline_spark.plans.analytics_ext import approx_distinct_summary
+    from movie_data_pipeline_spark.plans.sketches import approx_distinct_summary
 
     row = approx_distinct_summary(spark, "/root/testdata/sf0.001").collect()[0]
     assert row.orders_within_tol and row.parts_within_tol
@@ -1377,7 +1377,7 @@ def test_order_window_shipments_plan_has_no_nested_loop(spark):
     hash/sort-merge on wk), never a BroadcastNestedLoopJoin — the
     cartesian formulation is exactly what the week-bucket blocking
     exists to avoid at scale."""
-    from movie_data_pipeline_spark.plans.timeseries import order_window_shipments
+    from movie_data_pipeline_spark.plans.events import order_window_shipments
 
     plan = order_window_shipments(
         spark, "/root/testdata/sf0.001"
@@ -1391,7 +1391,7 @@ def test_events_gapfill_locf_fills_and_carries(spark):
     generated with observed=false and carry day 0's average."""
     import pandas as pd
     from pyspark.sql import functions as F
-    from movie_data_pipeline_spark.plans import timeseries as TS
+    from movie_data_pipeline_spark.plans import events as TS
 
     # build a miniature events table and run the same plan body by
     # monkey-patching load_events' output shape
@@ -2158,8 +2158,8 @@ def test_table_diff_key_only_table(spark):
 def test_containment_catches_what_jaccard_misses(spark):
     """A short doc fully quoted inside a much longer one has high
     containment but low Jaccard — the planted case for the asymmetric
-    metric (plans/analytics_ext5.py::containment_dedup_pairs)."""
-    import movie_data_pipeline_spark.plans.analytics_ext5 as ext5
+    metric (plans/dedup.py::containment_dedup_pairs)."""
+    import movie_data_pipeline_spark.plans.dedup as ext5
     from movie_data_pipeline_spark.sources import catalog as cat
 
     quote = "the quick brown fox jumps over the lazy dog tonight"

@@ -199,3 +199,35 @@ def test_predicates_reach_the_parquet_scan(spark, name):
         f"{name}: no non-empty PushedFilters in the executed plan — "
         "the predicate stopped reaching the scan"
     )
+
+
+PLAN_MODULES = [
+    "columns", "curation", "dedup", "events", "graphs", "movie_queries",
+    "pipeline", "retrieval", "sketches", "stats", "text", "tpch",
+    "verification",
+]
+
+
+def test_plan_modules_do_not_import_the_registry():
+    """Only the code that serves the registry imports it: in a fresh
+    interpreter, no domain module (nor the catalog that loads tables)
+    pulls ``plans.analytics`` into ``sys.modules``."""
+    import subprocess
+
+    mods = ["movie_data_pipeline_spark.sources.catalog"] + [
+        f"movie_data_pipeline_spark.plans.{m}" for m in PLAN_MODULES
+    ]
+    code = (
+        "import importlib, sys\n"
+        f"for m in {mods!r}:\n"
+        "    importlib.import_module(m)\n"
+        "    if 'movie_data_pipeline_spark.plans.analytics' in sys.modules:\n"
+        "        print(m)\n"
+        "        break\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parent.parent,
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    assert out == "", f"{out} imports plans.analytics"

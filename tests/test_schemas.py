@@ -177,7 +177,7 @@ def test_load_events_reads_nanos_shipment(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from movie_data_pipeline_spark.plans.analytics import load_events
+    from movie_data_pipeline_spark.sources.catalog import load_events
 
     ts_ns = [1_700_000_000_123_456_789, 1_700_000_001_000_000_001]
     pq.write_table(

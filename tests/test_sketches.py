@@ -99,7 +99,7 @@ def test_saturated_estimate_within_bound(spark):
 def test_overlap_gate_green_at_sf0001(spark):
     """The registry gate's booleans all hold at sf0.001 (exact regime
     there — sf0.01/sf0.1 exercise saturation via the oracle runs)."""
-    from movie_data_pipeline_spark.plans.analytics_ext16 import kmv_overlap_check
+    from movie_data_pipeline_spark.plans.sketches import kmv_overlap_check
 
     rows = kmv_overlap_check(spark, SF).collect()
     assert len(rows) == 10  # C(5 priorities, 2)

@@ -17,7 +17,7 @@ def staged_events_dir(spark, tmp_path_factory):
     """Re-stage the events as µs timestamps (streaming file source
     needs a Spark-readable TimestampType). Goes through load_events so
     the physical ts type (ns-long vs timestamp) is handled once."""
-    from movie_data_pipeline_spark.plans.analytics import load_events
+    from movie_data_pipeline_spark.sources.catalog import load_events
 
     out = str(tmp_path_factory.mktemp("events_stream"))
     (
@@ -162,7 +162,7 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     chk = str(tmp_path / "chk")
     src.mkdir()
 
-    from movie_data_pipeline_spark.plans.analytics import load_events
+    from movie_data_pipeline_spark.sources.catalog import load_events
 
     base = (
         load_events(spark, "/root/testdata/sf0.001")
@@ -558,7 +558,7 @@ def test_growth_accounting_stream_equals_batch(
 ):
     """The growth-accounting sink's published daily_new_vs_returning
     and wau_trailing_7d tables must equal the batch formulations
-    (plans/analytics_ext12) over the same corpus, including after a
+    (plans/events.py) over the same corpus, including after a
     full replay from a fresh checkpoint into the existing state
     (idempotence of the set-union incidence fold)."""
     incidence = str(tmp_path / "incidence")
@@ -911,11 +911,7 @@ def test_streaming_chunks_stream_equals_batch(spark, tmp_path):
     from pathlib import Path as _Path
 
     from movie_data_pipeline_spark.functions import chunking
-    from movie_data_pipeline_spark.plans.analytics_ext17 import (
-        _BUDGET,
-        _OVERLAP,
-        _sentenced,
-    )
+    from movie_data_pipeline_spark.plans.text import _BUDGET, _OVERLAP, _sentenced
     from movie_data_pipeline_spark.streaming import docs as SD
 
     docs = _sentenced(
@@ -1042,9 +1038,7 @@ def test_streaming_sentence_index_equals_batch(spark, tmp_path):
     import time as _time
     from pathlib import Path as _Path
 
-    from movie_data_pipeline_spark.plans.analytics_ext19 import (
-        dup_sentence_stats,
-    )
+    from movie_data_pipeline_spark.plans.dedup import dup_sentence_stats
     from movie_data_pipeline_spark.streaming import docs as SD
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
@@ -1156,9 +1150,7 @@ def test_sentence_index_compaction(spark, tmp_path):
     import time as _time
     from pathlib import Path as _Path
 
-    from movie_data_pipeline_spark.plans.analytics_ext19 import (
-        dup_sentence_stats,
-    )
+    from movie_data_pipeline_spark.plans.dedup import dup_sentence_stats
     from movie_data_pipeline_spark.streaming import docs as SD
     from movie_data_pipeline_spark.streaming.compaction import (
         compact_sentence_index,
